@@ -28,6 +28,7 @@ import glob
 import json
 import logging
 import os
+import re
 import time
 from base64 import b64decode
 from dataclasses import dataclass, field
@@ -36,6 +37,7 @@ from typing import Any, Callable, Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from grove_spark.session import local_frame
 from grove_spark.state.runstate import RunState, reference
 
 DEFAULT_FREQUENCY = 600  # grove/constants.py:63
@@ -458,7 +460,8 @@ def sinks_dim_from_configs(spark: SparkSession, configs: List[ConnectorConfig]) 
             rows.append(
                 (cfg.connector, cfg.identity, cfg.operation, descriptor, stream, "s3")
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "connector string, identity string, operation string, "
         "descriptor string, stream string, sink_kind string",
@@ -470,11 +473,20 @@ def sources_dim_from_configs(spark: SparkSession, configs: List[ConnectorConfig]
         (c.source, c.connector, c.identity, c.operation, c.frequency, c.delay)
         for c in configs
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "source string, connector string, identity string, operation string, "
         "frequency int, delay int",
     )
+
+
+# A filter naming a routing-dim column. Spark SQL identifiers are
+# case-insensitive (``STREAM`` binds to ``stream``), and ``\b`` also
+# matches a back-quoted name (`` `stream` ``).
+_ROUTING_DIM_REF = re.compile(
+    r"\b(descriptor|stream|sink_kind|routed_tokens)\b", re.IGNORECASE
+)
 
 
 def _filter_only_drop(df, chain):
@@ -488,8 +500,6 @@ def _filter_only_drop(df, chain):
     (``descriptor``/``stream``/``sink_kind``/``routed_tokens`` —
     pre-route those names resolve differently, so the predicate form
     would not be equivalent)."""
-    import re as _re
-
     from grove_spark.operators.processors import (
         _BUILTIN_FILTER_ENTRIES,
         _PROCESSORS,
@@ -505,10 +515,7 @@ def _filter_only_drop(df, chain):
         filters = cfg.get("filters")
         if filters is None:
             return None
-        if any(
-            _re.search(r"\b(descriptor|stream|sink_kind|routed_tokens)\b", f)
-            for f in filters
-        ):
+        if any(_ROUTING_DIM_REF.search(f) for f in filters):
             return None
         d = filter_drop_condition(df.schema, filters)
         drop = d if drop is None else (drop | d)
@@ -554,8 +561,10 @@ def assemble_fleet(
     run_fleet does, and the source is read once per tick).
 
     Plan shape (verified in tests/test_plan_hygiene.py): every join is a
-    BroadcastHashJoin, zero Python, and the fleet's ``In(source, [...])``
-    predicate reaches the parquet scan as a PushedFilter.
+    BroadcastHashJoin, zero Python, the fleet's ``In(source, [...])``
+    predicate reaches the parquet scan as a PushedFilter, and every plan
+    leaf is that scan or a LocalRelation (the member dim, sinks dims and
+    seen hashes are built with ``session.local_frame``).
     """
     from grove_spark.functions.hashing import entry_hash
     from grove_spark.operators.dedup import watermark_literal
@@ -639,7 +648,8 @@ def assemble_fleet(
     if exact is not None:
         ded = ded.where(exact)
     if seen_rows:
-        seen_df = spark.createDataFrame(
+        seen_df = local_frame(
+            spark,
             seen_rows,
             "connector string, identity string, operation string, "
             "__p string, __h string",
@@ -870,11 +880,16 @@ def run_fleet(
         # connector is legitimate caller config, not a typo
         pointer_cols={k: v for k, v in pointer_cols.items() if k in pc_of},
     )
-    routed.persist()
-    # the boundary-hash job below runs two more actions over the deduped
-    # lineage; without this persist each would re-scan the fact table and
-    # re-run every branch's watermark + anti-join
+    # deduped FIRST: persist() captures a frame's plan with the cache
+    # entries registered at that moment, so routed persisted second reads
+    # deduped's in-memory relation instead of re-deriving the stream. The
+    # stats action materialises both; the write reads routed's cache and
+    # the boundary-hash job reads deduped's — ONE source scan per tick.
+    # Persisted the other way round, routed's cache would re-derive the
+    # deduped stream from the fact table and the boundary job would scan
+    # it once more.
     deduped.persist()
+    routed.persist()
 
     run_id = state.new_run_id()
     data_paths = []

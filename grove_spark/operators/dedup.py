@@ -57,17 +57,19 @@ def dedup_by_hash(
     pointers>)`` (codegen evaluates CASE branches lazily), so the
     boundary cohort pays it and the other ~100% of rows skip both the
     JSON serialization and the md5. The seen frame is driver-local by
-    construction (it comes out of the manifest JSON), so collecting its
-    few distinct pointers at plan-build time is a LocalTableScan, not a
-    job. Anti-join semantics are unchanged: a null/unseen-pointer row
-    gets a null join key, which never equals, which survives — exactly
-    what a computed hash at an unseen pointer did.
+    construction (it comes out of the manifest JSON, built with
+    ``session.local_frame``), so its pointer projection folds into a
+    LocalRelation and collecting it at plan-build time starts no Spark
+    job; the distinct is taken here on the driver. Anti-join semantics
+    are unchanged: a null/unseen-pointer row gets a null join key, which
+    never equals, which survives — exactly what a computed hash at an
+    unseen pointer did.
     """
     ptrs = sorted({
         r["__p"]
         for r in seen.select(
             F.col("pointer").cast("string").alias("__p")
-        ).distinct().collect()
+        ).collect()
         if r["__p"] is not None
     })
     if not ptrs:

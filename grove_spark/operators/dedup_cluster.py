@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from grove_spark.session import local_frame
+
 
 def connected_components(
     pairs: DataFrame,
@@ -38,7 +40,8 @@ def connected_components(
 
     Returns (node, component) where component = MIN node id reachable —
     deterministic canonical labels. Input ids must be orderable (any
-    type with a total order; min() defines the canonical doc).
+    type with a total order; min() defines the canonical doc). A pair
+    with a null id contributes no edge, on either path below.
 
     Small graphs (r6): when the distinct edge list fits under
     ``small_graph_max_edges`` (200k — a bounded driver frame even at a
@@ -56,6 +59,11 @@ def connected_components(
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        # a null id is no document: its pairs are not edges (the
+        # propagation join could never match a null dst anyway, but a
+        # null src would bridge every component it touches, and
+        # union-find cannot order None against ids)
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
         # materialize ONCE: the edge list is re-joined every round, and
         # its lineage is the whole pair-generation pipeline (shingle
@@ -104,7 +112,7 @@ def connected_components(
         schema = T.StructType(
             [T.StructField("node", ndt), T.StructField("component", ndt)]
         )
-        return pairs.sparkSession.createDataFrame(rows, schema)
+        return local_frame(pairs.sparkSession, rows, schema)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()

@@ -80,6 +80,15 @@ def parse_catalyst(raw: Column, pattern: str = DEFAULT_PATTERN) -> Column:
 # the rewrite is exact for EVERY input, not just clean ones.
 _SEP = "\x01"
 _HIT = "\x02"
+# Java's non-multiline ``$`` also matches just BEFORE a final line
+# terminator, so replaceAll leaves that terminator after the last
+# emitted group (``n=42\n`` -> ``'42\n'``) where regexp_extract yields
+# ``'42'``. Lines ending in one take the exact fallback too; a
+# ``\r\n`` ending is caught by its final ``\n``. The test is one
+# EndsWith per terminator (a compare of the line's last bytes):
+# ``substring(raw, -1, 1)`` walks the whole line to count characters,
+# which made a 2M-row single-pass parse ~20% slower at local[4].
+_LINE_TERMINATORS = ("\n", "\r", "\u0085", "\u2028", "\u2029")
 
 
 def _ends_with_dollar_anchor(pattern: str) -> bool:
@@ -123,8 +132,9 @@ def _parse_array(raw: Column, pattern: str, rep: Column | None = None) -> Column
     empty string for a group that did not participate — the same value
     ``regexp_extract`` yields for it); an untouched line means no match,
     which is all-empty fields, ``regexp_extract``'s miss value. Lines
-    that already contain a sentinel byte (or are NULL) take the exact
-    per-group fallback, so results are identical for arbitrary input.
+    that already contain a sentinel byte, end in a line terminator (see
+    ``_LINE_TERMINATORS``) or are NULL take the exact per-group
+    fallback, so results are identical for arbitrary input.
     Returns None when the pattern is not single-pass eligible
     (see ``_single_pass_eligible``).
 
@@ -141,9 +151,15 @@ def _parse_array(raw: Column, pattern: str, rep: Column | None = None) -> Column
     if rep is None:
         rep = _parse_replace(raw, pattern)
     k = len(nums)
+    ends_in_terminator = F.lit(False)
+    for t in _LINE_TERMINATORS:
+        ends_in_terminator = ends_in_terminator | raw.endswith(t)
     return (
         F.when(
-            raw.isNull() | raw.contains(_SEP) | raw.contains(_HIT),
+            raw.isNull()
+            | raw.contains(_SEP)
+            | raw.contains(_HIT)
+            | ends_in_terminator,
             F.array(*[F.regexp_extract(raw, plain, n) for n in nums]),
         )
         .when(

@@ -33,6 +33,7 @@ from grove_spark.operators.routing import route, salted_repartition, sink_counts
 from grove_spark.operators.sinks import write_partitioned_parquet
 from grove_spark.plans.metadata import grove_metadata
 from grove_spark.plans.parse import DEFAULT_PATTERN, parse_stage
+from grove_spark.session import local_frame
 from grove_spark.state.runstate import RunState, reference
 
 
@@ -226,7 +227,8 @@ def run_incremental(
         sequences = spark.read.parquet(sequences_path)
     seen_df = None
     if watermark is not None and seen:
-        seen_df = spark.createDataFrame(
+        seen_df = local_frame(
+            spark,
             [(p, h) for p, hashes in seen.items() for h in hashes],
             "pointer string, hash string",
         )

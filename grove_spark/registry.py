@@ -27,6 +27,8 @@ from typing import Dict, List
 
 from pyspark.sql import DataFrame, SparkSession
 
+from grove_spark.session import local_frame
+
 CHRONOLOGICAL = "CHRONOLOGICAL"
 REVERSE = "REVERSE_CHRONOLOGICAL"
 
@@ -100,7 +102,8 @@ BY_NAME: Dict[str, ConnectorSpec] = {c.connector: c for c in CONNECTORS}
 
 def registry_dim(spark: SparkSession) -> DataFrame:
     """The registry as a broadcastable dimension DataFrame."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(c.connector, c.pointer_path, c.log_order, c.pointer_kind) for c in CONNECTORS],
         "connector string, pointer_path string, log_order string, pointer_kind string",
     )

@@ -69,3 +69,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """A small driver-side frame (dims, seen-hash state, union-find
+    labels) whose plan leaf is a ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` yields a ``LogicalRDD`` over a
+    Python RDD: every action or broadcast of it runs a Spark job that
+    feeds pickled rows through Python workers — a JVM<->Python crossing
+    paid per use for a few dozen rows. Built from a ``pyarrow.Table``
+    the rows travel to the JVM once, at plan-build time, and a
+    broadcast of the frame is a ``LocalTableScan``. ``schema`` is a
+    ``StructType`` or a DDL string; it is applied exactly (no inference).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -599,3 +599,21 @@ def test_filter_only_chain_compiles_to_predicate(spark, fixture_dir):
         routed4._jdf.queryExecution(), "formatted"
     )
     assert "Union" in plan4
+
+    # SQL identifiers are case-insensitive and may be back-quoted: these
+    # name routing-dim columns too, so they take the branch form, where
+    # the pre-route frame has no such column and the filter fails loudly
+    # (the predicate form would silently filter on the joined dim column)
+    from pyspark.errors import AnalysisException
+
+    from grove_spark.config import _filter_only_drop
+
+    for f in ["sql:STREAM = 'x'", "sql:`Sink_Kind` = 'x'"]:
+        chain = [{"processor": "filter_entries", "filters": [f]}]
+        assert _filter_only_drop(seq, chain) is None, f
+        cfg = ConnectorConfig.from_dict({
+            "connector": "e_audit", "identity": "e", "source": "okta",
+            "processors": chain,
+        })
+        with pytest.raises(AnalysisException):
+            assemble_fleet(spark, [cfg], seq)

@@ -37,6 +37,17 @@ ADVERSARIAL_ROWS = [
     # prefix/suffix garbage: anchored pattern must miss
     "x 2026-01-01T00:00:00Z level=info source=s doc=d n=3",
     "2026-01-01T00:00:00Z level=info source=s doc=d n=4 trailing",
+    # Java's `$` matches before a final line terminator: the replace
+    # would keep it on the last field -> exact fallback
+    "2026-01-01T00:00:00Z level=info source=s doc=d n=5\n",
+    "2026-01-01T00:00:00Z level=info source=s doc=d n=6\r\n",
+    "2026-01-01T00:00:00Z level=info source=s doc=d n=7\r",
+    "2026-01-01T00:00:00Z level=info source=s doc=d n=8\u0085",
+    "2026-01-01T00:00:00Z level=info source=s doc=d n=9\u2028",
+    "2026-01-01T00:00:00Z level=info source=s doc=d n=10\u2029",
+    # a terminator mid-line is no anchor position: both paths miss
+    "2026-01-01T00:00:00Z level=info\nsource=s doc=d n=11",
+    "\n",
 ]
 
 

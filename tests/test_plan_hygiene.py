@@ -5,7 +5,8 @@ These assert properties of the *physical plan*, not results:
   UDFs (``ArrowEvalPython``) only in the opt-in arrow parse stage;
 * watermark predicates reach the parquet scan (PushedFilters);
 * dim joins broadcast (no SortMergeJoin for sources/sinks);
-* the processor chain stays inside whole-stage codegen.
+* the processor chain stays inside whole-stage codegen;
+* driver-side frames are LocalRelations, never Python-RDD leaves.
 """
 
 import pytest
@@ -191,9 +192,26 @@ def test_every_gate_query_is_python_free(spark):
             ), f"{name} uses Python unexpectedly"
 
 
+def _leaf_kinds(df) -> set:
+    """Kinds of the optimized plan's leaves: ``parquet`` for a parquet
+    file relation, else the node name (``LocalRelation``, ``LogicalRDD``
+    — the latter is a Python RDD from ``createDataFrame(list)``)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    kinds = set()
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        name = leaf.nodeName()
+        if name == "LogicalRelation" and leaf.toString().rstrip().endswith("parquet"):
+            name = "parquet"
+        kinds.add(name)
+    return kinds
+
+
 def test_fleet_plan_hygiene(spark, loaded):
     """assemble_fleet over mixed chains: all-broadcast, no Python,
-    per-branch source sets pushed to the scan."""
+    per-branch source sets pushed to the scan, and every driver-side
+    frame (member dim, sinks dims, seen hashes) a LocalRelation — a
+    Python-RDD leaf would run a Python-worker job per broadcast."""
     from grove_spark.config import ConnectorConfig, assemble_fleet
 
     seq, _, _ = loaded
@@ -203,12 +221,58 @@ def test_fleet_plan_hygiene(spark, loaded):
             "connector": "gsuite_activities", "identity": "c", "source": "gsuite",
             "processors": [{"processor": "filter_entries", "filters": ["sql:n_tok < 20"]}],
         }),
+        ConnectorConfig.from_dict({
+            "connector": "slack_audit_logs", "identity": "d", "source": "slack",
+            "processors": [{"processor": "filter_paths", "paths": ["raw"]}],
+        }),
     ]
-    routed = assemble_fleet(spark, cfgs, seq)
+    wm = "2024-01-01 00:00:30"
+    routed = assemble_fleet(
+        spark, cfgs, seq,
+        watermarks={c.reference(): wm for c in cfgs},
+        seen_states={cfgs[0].reference(): {wm: ["0" * 32]}},
+    )
     plan = plan_of(routed)
     assert "SortMergeJoin" not in plan
     assert "BatchEvalPython" not in plan
     assert "In(source" in plan or "EqualTo(source" in plan  # pushed source filter
+    assert _leaf_kinds(routed) == {"parquet", "LocalRelation"}
+
+
+def test_resumed_run_and_registry_frames_are_local(spark, tmp_path):
+    """A resumed run_incremental's seen-hash frame and the registry dim
+    are LocalRelations too, and dedup_by_hash reads the seen pointers
+    without starting a Spark job."""
+    from grove_spark.operators.dedup import dedup_by_hash
+    from grove_spark.plans.pipeline import run_incremental
+    from grove_spark.registry import registry_dim
+    from grove_spark.session import local_frame
+    from grove_spark.state.runstate import RunState, reference
+
+    paths = write_fixture(str(tmp_path / "fx"), 200)
+    sources = spark.read.parquet(paths["sources"])
+    sinks = spark.read.parquet(paths["sinks"])
+    state = RunState(str(tmp_path / "state"))
+    for _ in range(2):
+        res = run_incremental(
+            spark, paths["sequences"], sources, sinks, state, n_partitions=4
+        )
+    assert state.seen_hashes(reference("fleet", "default"))  # resumed
+    assert "LocalRelation" in _leaf_kinds(res.deduped)
+    assert _leaf_kinds(res.routed) <= {"parquet", "LocalRelation"}
+    assert _leaf_kinds(registry_dim(spark)) == {"LocalRelation"}
+
+    seen = local_frame(spark, [("7", "h")], "pointer string, hash string")
+    df = spark.createDataFrame([(7, "d")], "event_time long, doc_id string")
+    sc = spark.sparkContext
+    sc.setJobGroup("hygiene-seen-pointers", "dedup_by_hash plan build")
+    try:
+        out = dedup_by_hash(df, seen, ["doc_id"], "event_time")
+        jobs = sc.statusTracker().getJobIdsForGroup("hygiene-seen-pointers")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert "__h" in plan_of(out)  # the seen pointer gated the hash
 
 
 def test_lsh_candidates_plan_shape(spark):

@@ -189,7 +189,9 @@ def test_asof_bucketed_window_partitions_on_bucket(spark):
 
 def test_small_graph_union_find_matches_distributed(spark):
     """r6 driver-side union-find must produce identical labels to the
-    distributed propagation loop, including string ids and chains."""
+    distributed propagation loop, including string ids, chains and pairs
+    with a null id — no edge on either path (a null node must not bridge
+    the components it touches)."""
     from grove_spark.operators.dedup_cluster import connected_components
 
     cases = [
@@ -200,7 +202,15 @@ def test_small_graph_union_find_matches_distributed(spark):
         spark.createDataFrame(
             [("kz", "ka"), ("ka", "km"), ("x1", "x2")], "a string, b string"
         ),
+        spark.createDataFrame(
+            [(1, 2), (3, None), (None, 4), (None, None), (5, None), (4, 6)],
+            "a long, b long",
+        ),
+        spark.createDataFrame(
+            [("kz", None), ("ka", "km"), (None, "x1")], "a string, b string"
+        ),
     ]
+    labels = []
     for pairs in cases:
         fast = {
             (r["node"], r["component"])
@@ -213,3 +223,6 @@ def test_small_graph_union_find_matches_distributed(spark):
             ).collect()
         }
         assert fast == slow and fast
+        labels.append(fast)
+    assert labels[2] == {(1, 1), (2, 1), (4, 4), (6, 4)}
+    assert labels[3] == {("ka", "ka"), ("km", "ka")}
