@@ -529,7 +529,6 @@ def assemble_fleet(
     watermarks: Optional[Dict[str, str]] = None,
     pointer_col: str = "event_time",
     seen_states: Optional[Dict[str, Dict[str, list]]] = None,
-    hash_cols: tuple = ("doc_id", "tokens"),
     return_deduped: bool = False,
     pointer_cols: Optional[Dict[str, str]] = None,
 ):
@@ -566,8 +565,11 @@ def assemble_fleet(
     leaf is that scan or a LocalRelation (the member dim, sinks dims and
     seen hashes are built with ``session.local_frame``).
     """
-    from grove_spark.functions.hashing import entry_hash
-    from grove_spark.operators.dedup import watermark_literal
+    from grove_spark.operators.dedup import (
+        ENTRY_HASH_COLS,
+        dedup_by_hash,
+        watermark_literal,
+    )
     from grove_spark.operators.enrich import enrich
     from grove_spark.operators.processors import apply_chain
     from grove_spark.operators.routing import route
@@ -601,9 +603,10 @@ def assemble_fleet(
     exact = None    # full-key predicate applied AFTER the enrich fan-out
     seen_rows = []
     ptr_case = None  # per-MEMBER pointer string for the seen anti-join
-    seen_gate = None  # rows that could possibly match the seen anti-join
+    pcs = set()  # distinct pointer columns
     for m in configs:
         pc = (pointer_cols or {}).get(m.reference(), pointer_col)
+        pcs.add(pc)
         wm = watermarks.get(m.reference())
         seen = seen_states.get(m.reference(), {})
         if wm:
@@ -625,18 +628,7 @@ def assemble_fleet(
             (m.connector, m.identity, m.operation, ptr, h)
             for ptr, hs in seen.items() for h in hs
         ]
-        if seen:
-            # only THIS member's rows AT one of its seen boundary
-            # pointers can match the anti-join below — gate the
-            # md5-of-canonical-JSON on that (same lazy-hash rule as
-            # operators/dedup.dedup_by_hash, r6): every other row skips
-            # the JSON serialization + md5 entirely
-            g = is_m & F.col(pc).cast("string").isin(
-                [str(p) for p in seen.keys()]
-            )
-            seen_gate = g if seen_gate is None else (seen_gate | g)
-        branch_ptr = F.when(is_m, F.col(pc).cast("string"))
-        ptr_case = branch_ptr if ptr_case is None else ptr_case.when(
+        ptr_case = (F.when if ptr_case is None else ptr_case.when)(
             is_m, F.col(pc).cast("string")
         )
     ded = sequences
@@ -648,23 +640,20 @@ def assemble_fleet(
     if exact is not None:
         ded = ded.where(exact)
     if seen_rows:
+        # seen state keyed by the full member identity; the md5 gate
+        # reads each member's own seen pointers (operators/dedup). Every
+        # row left is some member's, so with ONE pointer column the
+        # per-member CASE is just that column.
         seen_df = local_frame(
             spark,
             seen_rows,
             "connector string, identity string, operation string, "
-            "__p string, __h string",
+            "pointer string, hash string",
         )
-        ded = (
-            ded.withColumn(
-                "__h", F.when(seen_gate, entry_hash(list(hash_cols)))
-            )
-            .withColumn("__p", ptr_case)
-            .join(
-                F.broadcast(seen_df),
-                ["connector", "identity", "operation", "__p", "__h"],
-                "left_anti",
-            )
-            .drop("__p", "__h")
+        ded = dedup_by_hash(
+            ded, seen_df, ENTRY_HASH_COLS,
+            next(iter(pcs)) if len(pcs) == 1 else ptr_case,
+            key_cols=["connector", "identity", "operation"],
         )
 
     # ---- routing branches over the SHARED deduped stream ------------------
@@ -861,6 +850,8 @@ def run_fleet(
     metrics in the shared manifest. ``pointer_cols`` (reference ->
     column) supports heterogeneous pointer columns — timestamp and
     numeric-sequence connectors resume side by side in one tick."""
+    from grove_spark.sources.scans import incremental_scan
+
     now = time.time() if now is None else now
     base_version = state.version()
     due = [c for c in configs if state.due(c.reference(), c.frequency, now)]
@@ -869,7 +860,9 @@ def run_fleet(
 
     pointer_cols = pointer_cols or {}
     pc_of = {c.reference(): pointer_cols.get(c.reference(), pointer_col) for c in due}
-    sequences = spark.read.parquet(sequences_path)
+    # unpruned: members resume from different watermarks (and pointer
+    # columns); the per-member predicates live in assemble_fleet
+    sequences = incremental_scan(spark, sequences_path, pointer_col)
     watermarks = {c.reference(): state.pointer(c.reference()) for c in due}
     seen_states = {c.reference(): state.seen_hashes(c.reference()) for c in due}
     routed, deduped = assemble_fleet(
@@ -951,51 +944,33 @@ def run_fleet(
 
     # per-key boundary seen-hashes: rows AT each key's max pointer,
     # hashed like the next run's anti-join input. One small job over the
-    # persisted pruned batch (broadcast join on the 1-row-per-key max).
-    from grove_spark.functions.hashing import entry_hash
+    # persisted pruned batch per pointer column.
+    from grove_spark.operators.dedup import (
+        ENTRY_HASH_COLS,
+        advance_seen,
+        boundary_hashes,
+    )
 
-    brows = []
-    if stats:
-        for pc in distinct_pcs:
-            sub = deduped if len(distinct_pcs) == 1 else deduped.where(
-                key_expr.isin(keys_for(pc))
-            )
-            mx = sub.groupBy(*key_cols).agg(F.max(pc).alias(pc))
-            brows += (
-                sub.join(F.broadcast(mx), key_cols + [pc], "inner")
-                .select(
-                    *key_cols,
-                    F.col(pc).cast("string").alias("pointer"),
-                    entry_hash(["doc_id", "tokens"]).alias("hash"),
-                )
-                .distinct()
-                .collect()
-            )
-    new_seen: Dict[str, Dict[str, list]] = {}
-    for r in brows:
-        new_seen.setdefault(row_key(r), {}).setdefault(r["pointer"], []).append(r["hash"])
+    brows: Dict[str, list] = {}
+    for pc in distinct_pcs if stats else []:
+        sub = deduped if len(distinct_pcs) == 1 else deduped.where(
+            key_expr.isin(keys_for(pc))
+        )
+        for r in boundary_hashes(sub, ENTRY_HASH_COLS, pc, key_cols).collect():
+            brows.setdefault(row_key(r), []).append(r)
 
     updates = []
     for cfg in due:
         ref = cfg.reference()
         got = per_key.get(ref)
-        new_ptr = (got or {}).get("new_pointer")
-        seen = new_seen.get(ref)
-        ptr_str = None
-        if seen:
-            ptr_str = next(iter(seen))
-            if watermarks.get(ref) is not None and ptr_str == str(watermarks[ref]):
-                seen[ptr_str] = sorted(
-                    set(seen[ptr_str]) | set(seen_states.get(ref, {}).get(ptr_str, []))
-                )
+        # the boundary rows' own (Spark-cast) pointer string, so
+        # watermark and seen keys stringify identically
+        ptr, seen = advance_seen(brows.get(ref), watermarks.get(ref), seen_states.get(ref))
         updates.append(
             {
                 "key": ref,
-                # prefer the boundary rows' own (Spark-cast) pointer string
-                # so watermark and seen keys stringify identically
-                "pointer": ptr_str
-                or (str(new_ptr) if new_ptr is not None else state.pointer(ref)),
-                "seen": seen if seen else (seen_states.get(ref) or None),
+                "pointer": ptr,
+                "seen": seen,
                 "metrics": {"per_sink": (got or {}).get("per_sink", {})},
                 "data_paths": data_paths if got else [],
             }

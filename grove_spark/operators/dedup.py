@@ -11,6 +11,10 @@ Reference semantics re-expressed set-oriented:
   "prefer duplicates over loss" fallback (:717-722) is unreachable
   because the predicate is exact, not positional (documented, tested).
 
+The resume protocol's hash state lives here, shared by run_incremental
+and run_fleet: ``dedup_by_hash``, ``boundary_hashes``, ``advance_seen``.
+Its pruned watermark scan is sources/scans.incremental_scan.
+
 At 100 TB: the seen-hash table is tiny (one boundary pointer's worth of
 hashes per connector) -> broadcast anti-join, no shuffle of the big side.
 The watermark predicate is a pushed-down parquet/Iceberg filter.
@@ -18,12 +22,15 @@ The watermark predicate is a pushed-down parquet/Iceberg filter.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Dict, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from grove_spark.functions.hashing import entry_hash
+
+# the sequences table's entry-hash columns, in canonical JSON key order
+ENTRY_HASH_COLS = ("doc_id", "tokens")
 
 
 def dedup_within_batch(
@@ -43,53 +50,65 @@ def dedup_by_hash(
     df: DataFrame,
     seen: DataFrame,
     hash_cols: Sequence[str],
-    pointer_col: str,
+    pointer: str | Column,
+    key_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Anti-join against the persisted seen-hash state (D1).
 
-    ``seen`` has columns (pointer string, hash string) and is small by
+    ``seen`` has columns (*key_cols, pointer, hash) and is small by
     construction (boundary pointer only) -> broadcast anti-join.
+    ``pointer`` is a column name or a per-row Column (the fleet's
+    per-member pointer CASE); ``key_cols`` scope the state, so one fleet
+    member's seen hashes never drop another member's rows.
 
     The md5-of-canonical-JSON is the dominant per-row CPU of the whole
-    pipeline, yet only rows AT a seen pointer can ever match the
-    anti-join — every other row survives regardless of its hash. The
-    hash is therefore computed under ``CASE WHEN pointer IN (<seen
-    pointers>)`` (codegen evaluates CASE branches lazily), so the
-    boundary cohort pays it and the other ~100% of rows skip both the
-    JSON serialization and the md5. The seen frame is driver-local by
-    construction (it comes out of the manifest JSON, built with
-    ``session.local_frame``), so its pointer projection folds into a
-    LocalRelation and collecting it at plan-build time starts no Spark
-    job; the distinct is taken here on the driver. Anti-join semantics
-    are unchanged: a null/unseen-pointer row gets a null join key, which
-    never equals, which survives — exactly what a computed hash at an
-    unseen pointer did.
+    pipeline, yet only rows AT a seen pointer can match the anti-join.
+    The hash is therefore computed under ``CASE WHEN pointer IN (<seen
+    pointers>)`` (codegen evaluates CASE branches lazily): every other
+    row skips the JSON serialization and the md5. The gate is not keyed:
+    it only picks the rows that pay the hash, and the keyed anti-join
+    still decides which rows drop, so a row at ANOTHER key's seen pointer
+    is hashed and survives. (A keyed gate, ``key = k AND pointer IN
+    (...)`` per key, costs ~15 py4j Column calls per key: ~0.2 s of
+    driver time per 12-member fleet tick on 4 cores.) A per-row pointer
+    Column is projected as ``__p`` first and the gate reads ``__p``, so
+    the CASE is evaluated once a row. The seen frame is driver-local
+    (``session.local_frame`` over the manifest JSON), so collecting its
+    pointers here starts no Spark job. A null/unseen-pointer row gets a
+    null ``__h``, which never equals, so it survives — as a computed hash
+    at an unseen pointer would.
     """
-    ptrs = sorted({
-        r["__p"]
-        for r in seen.select(
-            F.col("pointer").cast("string").alias("__p")
-        ).collect()
-        if r["__p"] is not None
-    })
+    key_cols = list(key_cols)
+    seen2 = seen.select(
+        *key_cols,
+        F.col("pointer").cast("string").alias("__p"),
+        F.col("hash").alias("__h"),
+    )
+    ptrs = sorted({r["__p"] for r in seen2.select("__p").collect()} - {None})
     if not ptrs:
         return df  # empty seen-state: the anti-join kept every row
-    p = F.col(pointer_col).cast("string")
+    if isinstance(pointer, str):
+        p = F.col(pointer).cast("string")
+    else:
+        df = df.withColumn("__p", pointer.cast("string"))
+        p = F.col("__p")
     hashed = df.withColumn(
         "__h", F.when(p.isin(ptrs), entry_hash(hash_cols))
     ).withColumn("__p", p)
-    seen2 = F.broadcast(
-        seen.select(
-            F.col("pointer").cast("string").alias("__p"),
-            F.col("hash").alias("__h"),
-        )
-    )
-    return hashed.join(seen2, ["__p", "__h"], "left_anti").drop("__p", "__h")
+    return hashed.join(
+        F.broadcast(seen2), [*key_cols, "__p", "__h"], "left_anti"
+    ).drop("__p", "__h")
 
 
-def boundary_hashes(df: DataFrame, hash_cols: Sequence[str], pointer_col: str) -> DataFrame:
+def boundary_hashes(
+    df: DataFrame,
+    hash_cols: Sequence[str],
+    pointer_col: str,
+    key_cols: Sequence[str] = (),
+) -> DataFrame:
     """New seen-hash state: hashes of entries sharing the max pointer value
-    (the bounded-state rule, reference :634-637 / hash_entries :604-625).
+    (the bounded-state rule, reference :634-637 / hash_entries :604-625),
+    one max per ``key_cols`` group. Returns (*key_cols, pointer, hash).
 
     The max is taken on the NATIVE pointer type (string max mis-orders
     numeric sequence pointers); the stringification for the manifest
@@ -100,12 +119,35 @@ def boundary_hashes(df: DataFrame, hash_cols: Sequence[str], pointer_col: str) -
     a whole day of hashes; the reference has the identical property
     (:634-637). For coarse pointers prefer a finer pointer column or
     strict-> semantics."""
-    mx = df.select(F.col(pointer_col).alias("__mx")).agg(F.max("__mx").alias("__mx"))
-    rows = df.join(F.broadcast(mx), df[pointer_col] == mx["__mx"], "inner")
-    return rows.select(
-        F.col(pointer_col).cast("string").alias("pointer"),
-        entry_hash(hash_cols).alias("hash"),
-    ).distinct()
+    key_cols = list(key_cols)
+    mx = df.groupBy(*key_cols).agg(F.max(pointer_col).alias(pointer_col))
+    return (
+        df.join(F.broadcast(mx), key_cols + [pointer_col], "inner")
+        .select(
+            *key_cols,
+            F.col(pointer_col).cast("string").alias("pointer"),
+            entry_hash(hash_cols).alias("hash"),
+        )
+        .distinct()
+    )
+
+
+def advance_seen(
+    boundary: Sequence,
+    watermark: Optional[str],
+    prev_seen: Optional[Dict[str, list]],
+) -> Tuple[Optional[str], Optional[Dict[str, list]]]:
+    """(pointer, seen) to commit for one key: ``boundary`` is the key's
+    collected boundary_hashes rows (none: pointer and hashes stay). A
+    pointer that did not advance keeps its earlier hashes too (reference
+    :634-637), so rows emitted by earlier runs there stay dropped."""
+    if not boundary:
+        return watermark, (prev_seen or None)
+    ptr = boundary[0]["pointer"]
+    keep = {r["hash"] for r in boundary}
+    if watermark is not None and ptr == str(watermark):
+        keep |= set((prev_seen or {}).get(ptr, []))
+    return ptr, {ptr: sorted(keep)}
 
 
 def watermark_literal(df: DataFrame, pointer_col: str, pointer: str):

@@ -101,23 +101,7 @@ def hashed_shingle_sets(
                 m = rb.num_rows
                 if not m:
                     continue
-                hashes, k = _gram_hashes_of_batch(rb.column(1), n)
-                seg = np.repeat(np.arange(m), k)
-                if len(hashes):
-                    hsig = hashes.view(np.int64)
-                    order = np.lexsort((hsig, seg))
-                    hs_s = hsig[order]
-                    seg_s = seg[order]
-                    first = np.ones(len(hs_s), dtype=bool)
-                    first[1:] = (hs_s[1:] != hs_s[:-1]) | (
-                        seg_s[1:] != seg_s[:-1]
-                    )
-                    dh = hs_s[first]
-                    dseg = seg_s[first]
-                else:
-                    dh = np.empty(0, np.int64)
-                    dseg = np.empty(0, np.int64)
-                kd = np.bincount(dseg, minlength=m).astype(np.int64)
+                dh, _, kd = _distinct_gram_hashes(rb.column(1), n)
                 offs = np.zeros(m + 1, dtype=np.int64)
                 np.cumsum(kd, out=offs[1:])
                 arr = pa.ListArray.from_arrays(
@@ -412,6 +396,27 @@ def _gram_hashes_of_batch(col, n):
     return _xxh64_bytes(data, starts, ends - starts), k
 
 
+def _distinct_gram_hashes(col, n):
+    """Per-document DISTINCT word-n-gram hashes of an Arrow string
+    column: (hashes int64 sorted within each doc, their doc index,
+    per-doc distinct count int64 of length ``len(col)``)."""
+    import numpy as np
+
+    m = len(col)
+    hashes, k = _gram_hashes_of_batch(col, n)
+    seg = np.repeat(np.arange(m), k)
+    if not len(hashes):
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.zeros(m, np.int64)
+    hsig = hashes.view(np.int64)
+    order = np.lexsort((hsig, seg))
+    hs_s = hsig[order]
+    seg_s = seg[order]
+    first = np.ones(len(hs_s), dtype=bool)
+    first[1:] = (hs_s[1:] != hs_s[:-1]) | (seg_s[1:] != seg_s[:-1])
+    dseg = seg_s[first]
+    return hs_s[first], dseg, np.bincount(dseg, minlength=m).astype(np.int64)
+
+
 def hashed_gram_rows(
     docs: DataFrame,
     n: int,
@@ -449,23 +454,7 @@ def hashed_gram_rows(
                 m = rb.num_rows
                 if not m:
                     continue
-                hashes, k = _gram_hashes_of_batch(rb.column(1), n)
-                seg = np.repeat(np.arange(m), k)
-                if len(hashes):
-                    hsig = hashes.view(np.int64)
-                    order = np.lexsort((hsig, seg))
-                    hs_s = hsig[order]
-                    seg_s = seg[order]
-                    first = np.ones(len(hs_s), dtype=bool)
-                    first[1:] = (hs_s[1:] != hs_s[:-1]) | (
-                        seg_s[1:] != seg_s[:-1]
-                    )
-                    dh = hs_s[first]
-                    dseg = seg_s[first]
-                else:
-                    dh = np.empty(0, np.int64)
-                    dseg = np.empty(0, np.int64)
-                kd = np.bincount(dseg, minlength=m).astype(np.int64)
+                dh, dseg, kd = _distinct_gram_hashes(rb.column(1), n)
                 empty = np.flatnonzero(kd == 0)
                 idx = np.concatenate([dseg, empty])
                 g_vals = np.concatenate(

@@ -421,12 +421,13 @@ def run_tokenize_ingest(
     """The front door as a RESUMABLE INGEST: raw-documents table →
     trained BPE → the pipeline's native sequence shape, committed
     through the same manifest machinery as ``run_incremental``
-    (plans/pipeline.py) — watermark pointer, file-level pruning, pending
-    registration, writer-side footer stats INTO the commit.
+    (plans/pipeline.py) — the same pruned watermark scan
+    (sources/scans.incremental_scan, footer stats cached in the state
+    dir), pending registration, writer-side footer stats INTO the commit.
 
     Exactly-once here is simpler than the routing pipeline's boundary
-    protocol: the pointer column is a UNIQUE monotone ingest id, so a
-    STRICT ``>`` predicate needs no seen-hash anti-join.
+    protocol: the pointer column is a UNIQUE monotone ingest id, so the
+    scan's STRICT ``>`` predicate needs no seen-hash anti-join.
 
     Vocabulary policy: train once, reuse forever. The first run trains
     on its batch and saves ``vocab_path`` (atomic); every later run
@@ -438,12 +439,8 @@ def run_tokenize_ingest(
 
     from pyspark.sql import functions as F
 
-    from grove_spark.sources.file_stats import (
-        FileStatsCache,
-        _list_parquet,
-        parquet_file_stats,
-        prune_files,
-    )
+    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
+    from grove_spark.sources.scans import incremental_scan
     from grove_spark.state.runstate import reference
 
     key = reference(connector_key, identity)
@@ -451,22 +448,11 @@ def run_tokenize_ingest(
     watermark = state.pointer(key)
     run_id = state.new_run_id()
 
-    prune_metrics = None
-    if watermark is not None:
-        cache = FileStatsCache(os.path.join(state.root, "filestats"))
-        kept, total = prune_files(
-            documents_path, pointer_col, watermark, inclusive=False,
-            cache=cache,
-        )
-        prune_metrics = {"files_kept": len(kept), "files_total": total}
-        if kept:
-            docs = spark.read.option("basePath", documents_path).parquet(*kept)
-        else:
-            docs = spark.read.parquet(documents_path).where(F.lit(False))
-        wm = F.lit(watermark).cast(docs.schema[pointer_col].dataType)
-        docs = docs.where(F.col(pointer_col) > wm)
-    else:
-        docs = spark.read.parquet(documents_path)
+    docs = incremental_scan(
+        spark, documents_path, pointer_col, watermark, prune=True,
+        stats_cache=os.path.join(state.root, "filestats"),
+    )
+    prune_metrics = getattr(docs, "_grove_prune", None)
 
     # persist once: on the training run the SAME source frame feeds
     # both train_bpe's piece count and the tokenize kernel (the shared-

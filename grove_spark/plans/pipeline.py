@@ -5,7 +5,8 @@ entrypoint (SURVEY §3.4): what Grove does with 50 threads, per-page HTTP
 and row-at-a-time processors becomes ONE declarative DataFrame plan:
 
   scan sequences (watermark predicate pushed to parquet/Iceberg)
-    -> vectorized parse of the raw line (catalyst regex | arrow UDF)
+    -> seen-hash anti-join at the resume boundary (operators/dedup)
+    -> parse of the raw line in Catalyst (plans/parse.parse_stage)
     -> broadcast enrich with the sources dim (connector/pointer_path/...)
     -> optional processor chain (raw vs processed dual stream)
     -> broadcast routing join to sinks dim (fan-out, salted repartition)
@@ -20,6 +21,7 @@ project inside whole-stage codegen.
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass
 from typing import Optional
@@ -27,13 +29,19 @@ from typing import Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from grove_spark.operators.dedup import dedup_by_pointer
+from grove_spark.operators.dedup import (
+    ENTRY_HASH_COLS,
+    advance_seen,
+    dedup_by_hash,
+    dedup_by_pointer,
+)
 from grove_spark.operators.enrich import enrich
 from grove_spark.operators.routing import route, salted_repartition, sink_counts
 from grove_spark.operators.sinks import write_partitioned_parquet
 from grove_spark.plans.metadata import grove_metadata
 from grove_spark.plans.parse import DEFAULT_PATTERN, parse_stage
 from grove_spark.session import local_frame
+from grove_spark.sources.scans import incremental_scan
 from grove_spark.state.runstate import RunState, reference
 
 
@@ -53,7 +61,6 @@ def build_pipeline(
     sequences: DataFrame,
     sources_dim: DataFrame,
     sinks_dim: DataFrame,
-    parse_engine: str = "catalyst",
     pattern: str = DEFAULT_PATTERN,
     watermark: str | None = None,
     pointer_col: str = "event_time",
@@ -61,12 +68,9 @@ def build_pipeline(
     n_salt: int = 8,
     with_metadata: bool = True,
     observe: bool = True,
-    dedup_batch: bool = False,
     seen_state: DataFrame | None = None,
     repartition: bool = True,
     processed_chain: list | None = None,
-    watermark_inclusive: bool = False,
-    hash_cols: tuple = ("doc_id", "tokens"),
 ) -> PipelineResult:
     """Assemble the full plan lazily; nothing executes here."""
     df = sequences
@@ -77,8 +81,7 @@ def build_pipeline(
         # late rows sharing the committed pointer are kept, not dropped
         # (exactly-once at the boundary, reference :627-671)
         df = dedup_by_pointer(
-            df, pointer_col, watermark,
-            inclusive=watermark_inclusive or seen_state is not None,
+            df, pointer_col, watermark, inclusive=seen_state is not None,
         )
     if seen_state is not None:
         # D1 content-hash dedup against the previous run's boundary state
@@ -87,18 +90,10 @@ def build_pipeline(
         # table is tiny by construction -> broadcast anti-join; the md5
         # of canonical JSON per row is the dominant CPU cost, there is
         # NO shuffle.
-        from grove_spark.operators.dedup import dedup_by_hash
-
-        df = dedup_by_hash(df, seen_state, list(hash_cols), pointer_col)
-    if dedup_batch:
-        # exact within-collection dedup (a full shuffle on the content
-        # hash — only needed when one collection can itself contain dups)
-        from grove_spark.operators.dedup import dedup_within_batch
-
-        df = dedup_within_batch(df, list(hash_cols))
+        df = dedup_by_hash(df, seen_state, ENTRY_HASH_COLS, pointer_col)
     deduped = df  # boundary-hash source: same rows/columns the next run hashes
     if "raw" in df.columns:
-        df = parse_stage(df, "raw", pattern, engine=parse_engine)
+        df = parse_stage(df, "raw", pattern)
     df = enrich(df, sources_dim, on="source")
     if with_metadata:
         df = grove_metadata(
@@ -177,13 +172,13 @@ def run_incremental(
     connector_key: str = "fleet",
     identity: str = "default",
     pointer_col: str = "event_time",
-    hash_cols: tuple = ("doc_id", "tokens"),
     **plan_kw,
 ) -> PipelineResult:
     """One resumable run: read watermark + boundary seen-hashes from
-    run-state, build the plan with an INCLUSIVE incremental predicate and
-    a seen-hash anti-join, write sinks, then commit watermark + new
-    boundary hashes + metrics + data lineage in one manifest.
+    run-state, scan with a pruned INCLUSIVE incremental predicate, build
+    the plan with a seen-hash anti-join, write sinks, then commit
+    watermark + new boundary hashes + metrics + data lineage in one
+    manifest.
 
     The inclusive predicate + anti-join pair is what makes the boundary
     exactly-once: rows arriving later with event_time EQUAL to the
@@ -198,33 +193,6 @@ def run_incremental(
     seen = state.seen_hashes(key)
     run_id = state.new_run_id()
 
-    # file-level pruning (S6's Iceberg analog): skip whole source files
-    # whose footer max is behind the watermark BEFORE the reader lists
-    # them. Footer stats are cached in the state dir keyed by
-    # (path, mtime, size), so a resumed run over an append-only source
-    # pays one footer read per NEW file only. INCLUSIVE keep (max >=
-    # watermark) because the boundary file's equal-pointer rows are
-    # re-read for the seen-hash anti-join.
-    import os as _os
-
-    prune_metrics = None
-    if watermark is not None:
-        from grove_spark.sources.file_stats import FileStatsCache, prune_files
-
-        cache = FileStatsCache(_os.path.join(state.root, "filestats"))
-        kept, total = prune_files(
-            sequences_path, pointer_col, watermark, inclusive=True,
-            cache=cache,
-        )
-        prune_metrics = {"files_kept": len(kept), "files_total": total}
-        if kept:
-            sequences = (
-                spark.read.option("basePath", sequences_path).parquet(*kept)
-            )
-        else:
-            sequences = spark.read.parquet(sequences_path).where(F.lit(False))
-    else:
-        sequences = spark.read.parquet(sequences_path)
     seen_df = None
     if watermark is not None and seen:
         seen_df = local_frame(
@@ -232,10 +200,19 @@ def run_incremental(
             [(p, h) for p, hashes in seen.items() for h in hashes],
             "pointer string, hash string",
         )
+    # file-level pruning (S6's Iceberg analog) with footer stats cached
+    # in the state dir, so a resumed run over an append-only source pays
+    # one footer read per NEW file only. INCLUSIVE (>=) with a seen-state:
+    # the boundary rows are re-read for the seen-hash anti-join.
+    sequences = incremental_scan(
+        spark, sequences_path, pointer_col, watermark,
+        inclusive=seen_df is not None, prune=True,
+        stats_cache=os.path.join(state.root, "filestats"),
+    )
+    prune_metrics = getattr(sequences, "_grove_prune", None)
     result = build_pipeline(
         sequences, sources_dim, sinks_dim,
-        watermark=watermark, pointer_col=pointer_col,
-        seen_state=seen_df, hash_cols=hash_cols, **plan_kw,
+        pointer_col=pointer_col, seen_state=seen_df, **plan_kw,
     )
 
     # several actions follow (counts, write, boundary max + join) and ALL
@@ -273,20 +250,11 @@ def run_incremental(
     # so the next run's string round-trip is self-consistent.
     from grove_spark.operators.dedup import boundary_hashes
 
-    if counts_rows:
-        brows = boundary_hashes(result.deduped, list(hash_cols), pointer_col).collect()
-    else:
-        brows = []
-    if brows:
-        new_ptr = brows[0]["pointer"]
-        new_seen = {new_ptr: sorted(r["hash"] for r in brows)}
-        if watermark is not None and new_ptr == str(watermark):
-            # pointer did not advance: keep the previously-seen hashes at
-            # this boundary too (reference :634-637 bounded-state rule)
-            merged = set(new_seen[new_ptr]) | set(seen.get(new_ptr, []))
-            new_seen[new_ptr] = sorted(merged)
-    else:
-        new_ptr, new_seen = watermark, (seen if watermark is not None else None)
+    brows = (
+        boundary_hashes(result.deduped, ENTRY_HASH_COLS, pointer_col).collect()
+        if counts_rows else []
+    )
+    new_ptr, new_seen = advance_seen(brows, watermark, seen)
     metrics = {
         "per_sink": {r["descriptor"]: {"rows": r["rows"], "sum_n_tok": r["sum_n_tok"]} for r in counts_rows},
     }

@@ -40,11 +40,15 @@ def incremental_scan(
     prune: bool = False,
     stats_cache=None,
     merge_schema: bool = False,
+    inclusive: bool = False,
 ) -> DataFrame:
     """Watermarked incremental scan with optional consistency delay,
     lookback re-scan and file-level pruning.
 
-    ``watermark`` (exclusive lower bound) comes from run-state; ``delay_s``
+    ``watermark`` (exclusive lower bound) comes from run-state;
+    ``inclusive=True`` re-reads the rows AT it, for a caller that drops
+    the already-emitted ones with a seen-hash anti-join (dedup_by_hash —
+    the boundary half of the resume protocol). ``delay_s``
     imposes the reference's late-data ceiling ``end = now - delay``
     (github/audit_log.py:121, bigquery_query.py:106). ``lookback_s``
     widens the lower bound to ``watermark - lookback`` (the BigQuery
@@ -116,6 +120,7 @@ def incremental_scan(
         )
         kept, total = prune_files(
             path, pointer_col, wm,
+            inclusive=inclusive,
             ceiling=ceiling_arg,
             stats=stats,
         )
@@ -131,7 +136,9 @@ def incremental_scan(
             # column present only in newer files would vanish from the
             # empty batch), the always-false predicate reads no data
             df = reader.parquet(path).where(F.lit(False))
-        df = _apply_window(df, pointer_col, watermark, lookback_s, ceiling_py)
+        df = _apply_window(
+            df, pointer_col, watermark, lookback_s, ceiling_py, inclusive
+        )
         df._grove_prune = prune_info  # type: ignore[attr-defined]
         return df
 
@@ -139,7 +146,9 @@ def incremental_scan(
     if merge_schema and fmt == "parquet":
         reader = reader.option("mergeSchema", "true")
     df = reader.format(fmt).load(path)
-    return _apply_window(df, pointer_col, watermark, lookback_s, ceiling_py)
+    return _apply_window(
+        df, pointer_col, watermark, lookback_s, ceiling_py, inclusive
+    )
 
 
 def _apply_window(
@@ -148,6 +157,7 @@ def _apply_window(
     watermark: Optional[str],
     lookback_s: int,
     ceiling: Optional[dt.datetime],
+    inclusive: bool,
 ) -> DataFrame:
     """The row-level incremental predicates (always applied — file
     pruning is coarse and must never change results)."""
@@ -165,7 +175,8 @@ def _apply_window(
                 lo = lo - F.lit(lookback_s)
             else:
                 lo = lo - F.expr(f"INTERVAL {lookback_s} SECONDS")
-        df = df.where(F.col(pointer_col) > lo)
+        col = F.col(pointer_col)
+        df = df.where(col >= lo if inclusive else col > lo)
     if ceiling is not None:
         from pyspark.sql import types as T
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grove_spark.functions.hashing import entry_hash
+from grove_spark.operators.dedup import ENTRY_HASH_COLS
 from grove_spark.operators.enrich import enrich
 from grove_spark.operators.routing import route
 from grove_spark.plans.parse import DEFAULT_PATTERN, parse_stage
@@ -60,7 +61,7 @@ def build_stream(
     df = stream.withColumn("event_time", F.col("event_time").cast("timestamp"))
     df = df.withWatermark("event_time", delay)
     if dedup:
-        df = df.withColumn("__h", entry_hash(["doc_id", "tokens"]))
+        df = df.withColumn("__h", entry_hash(ENTRY_HASH_COLS))
         df = df.dropDuplicatesWithinWatermark(["__h"]).drop("__h")
     if "raw" in df.columns:
         df = parse_stage(df, "raw", pattern, engine="catalyst")

@@ -207,11 +207,41 @@ def _leaf_kinds(df) -> set:
     return kinds
 
 
+def _exprs_named(df, name: str) -> list:
+    """Every projected ``<expr> AS <name>#id`` of the optimized plan."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    exprs = []
+    for line in plan.splitlines():
+        at = line.find("Project [")
+        if at < 0:
+            continue
+        depth, item = 0, ""
+        for ch in line[at + len("Project ["):]:
+            if ch in ")]" and depth == 0:
+                break
+            depth += (ch in "([") - (ch in ")]")
+            if ch == "," and depth == 0:
+                exprs.append(item.strip())
+                item = ""
+            else:
+                item += ch
+        exprs.append(item.strip())
+    return [e for e in exprs if re.search(rf" AS {name}#\d+L?$", e)]
+
+
 def test_fleet_plan_hygiene(spark, loaded):
     """assemble_fleet over mixed chains: all-broadcast, no Python,
     per-branch source sets pushed to the scan, and every driver-side
     frame (member dim, sinks dims, seen hashes) a LocalRelation — a
-    Python-RDD leaf would run a Python-worker job per broadcast."""
+    Python-RDD leaf would run a Python-worker job per broadcast.
+
+    The md5 gate reads each row's pointer once: the ``__h`` expression
+    holds exactly one CASE WHEN (its own), with one pointer column and
+    with mixed ones. The per-member pointer CASE inlined into the gate
+    (once, or once per member in a keyed gate) would be evaluated again
+    for every row."""
     from grove_spark.config import ConnectorConfig, assemble_fleet
 
     seq, _, _ = loaded
@@ -230,13 +260,40 @@ def test_fleet_plan_hygiene(spark, loaded):
     routed = assemble_fleet(
         spark, cfgs, seq,
         watermarks={c.reference(): wm for c in cfgs},
-        seen_states={cfgs[0].reference(): {wm: ["0" * 32]}},
+        seen_states={c.reference(): {wm: ["0" * 32]} for c in cfgs[:2]},
     )
     plan = plan_of(routed)
     assert "SortMergeJoin" not in plan
     assert "BatchEvalPython" not in plan
     assert "In(source" in plan or "EqualTo(source" in plan  # pushed source filter
     assert _leaf_kinds(routed) == {"parquet", "LocalRelation"}
+
+    mixed = assemble_fleet(
+        spark, cfgs, seq,
+        watermarks={**{c.reference(): wm for c in cfgs[:2]}, cfgs[2].reference(): "10"},
+        seen_states={cfgs[0].reference(): {wm: ["0" * 32]},
+                     cfgs[2].reference(): {"10": ["1" * 32]}},
+        pointer_cols={cfgs[2].reference(): "n_tok"},
+    )
+    for fleet in (routed, mixed):
+        hs = _exprs_named(fleet, "__h")
+        assert hs and all(h.count("CASE WHEN") == 1 for h in hs), hs
+
+
+def test_resume_protocol_has_one_implementation():
+    """The resume protocol (pruned watermark scan, seen-hash anti-join,
+    boundary hashes) lives in sources/ and operators/dedup.py; the
+    drivers call it rather than carrying their own copy."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "grove_spark"
+    pruning = sorted(
+        str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+        if p.relative_to(pkg).parts[0] != "sources" and "prune_files(" in p.read_text()
+    )
+    assert pruning == []
+    for rel in ("config.py", "plans/pipeline.py"):
+        assert "entry_hash" not in (pkg / rel).read_text(), rel
 
 
 def test_resumed_run_and_registry_frames_are_local(spark, tmp_path):

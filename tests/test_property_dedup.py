@@ -71,37 +71,58 @@ SCHEMA = T.StructType([
     T.StructField("timestamp", T.StringType()),
     T.StructField("event", T.StringType()),
 ])
+KEYED = T.StructType([T.StructField("k", T.StringType()), *SCHEMA.fields])
+PAGE1 = st.lists(
+    st.tuples(st.integers(0, 5), st.sampled_from(["A", "B", "C"])),
+    min_size=1, max_size=8, unique=True,
+)
 
 
 @settings(**SETTINGS)
 @given(
-    page1=st.lists(
-        st.tuples(st.integers(0, 5), st.sampled_from(["A", "B", "C"])),
-        min_size=1, max_size=8, unique=True,
-    ),
+    page1=PAGE1,
+    page1_y=PAGE1,
     page2=st.lists(
         st.tuples(st.integers(3, 8), st.sampled_from(["A", "B", "C", "D"])),
         min_size=1, max_size=8, unique=True,
     ),
 )
-def test_hash_dedup_matches_reference(spark, page1, page2):
+def test_hash_dedup_matches_reference(spark, page1, page1_y, page2):
     """Boundary seen-hashes from page1 anti-join page2 exactly as the
     reference's deduplicate_by_hash would (pyref oracle), including
-    same-pointer different-content survivors."""
-    p1 = [{"timestamp": str(t), "event": e} for t, e in sorted(page1)]
-    p2 = [{"timestamp": str(t), "event": e} for t, e in sorted(page2)]
+    same-pointer different-content survivors.
 
-    seen_df = boundary_hashes(
-        spark.createDataFrame(p1, schema=SCHEMA), ["timestamp", "event"], "timestamp"
-    )
-    out = dedup_by_hash(
-        spark.createDataFrame(p2, schema=SCHEMA), seen_df,
-        ["timestamp", "event"], "timestamp",
-    )
-    got = sorted((r["timestamp"], r["event"]) for r in out.collect())
+    Keyed form (the fleet's per-member state, ``key_cols``): keys x and
+    y resume from their own page1 and then both read the SAME page2 rows
+    — shared pointers and contents — so one key's seen hashes dropping
+    the other key's rows would show against the per-key oracle."""
+    cols = ["timestamp", "event"]
 
-    all_hashes = pyref.dedup_by_hash(p1, "timestamp", {})[1]
-    bound = max(all_hashes)  # string pointers, single digits -> max is the boundary
-    old = {p: h for p, h in all_hashes.items() if p == bound}
-    want, _ = pyref.dedup_by_hash(p2, "timestamp", old)
-    assert got == sorted((w["timestamp"], w["event"]) for w in want)
+    def entries(page):
+        return [{"timestamp": str(t), "event": e} for t, e in sorted(page)]
+
+    def want(p1, p2):
+        all_hashes = pyref.dedup_by_hash(p1, "timestamp", {})[1]
+        bound = max(all_hashes)  # string pointers, single digits -> max is the boundary
+        old = {p: h for p, h in all_hashes.items() if p == bound}
+        kept, _ = pyref.dedup_by_hash(p2, "timestamp", old)
+        return sorted((w["timestamp"], w["event"]) for w in kept)
+
+    p1, p1_y, p2 = entries(page1), entries(page1_y), entries(page2)
+    seen_df = boundary_hashes(spark.createDataFrame(p1, schema=SCHEMA), cols, "timestamp")
+    out = dedup_by_hash(spark.createDataFrame(p2, schema=SCHEMA), seen_df, cols, "timestamp")
+    assert sorted((r["timestamp"], r["event"]) for r in out.collect()) == want(p1, p2)
+
+    def keyed(pages):
+        return spark.createDataFrame(
+            [(k, e["timestamp"], e["event"]) for k, page in pages.items() for e in page],
+            schema=KEYED,
+        )
+
+    seen_k = boundary_hashes(keyed({"x": p1, "y": p1_y}), cols, "timestamp", key_cols=["k"])
+    out_k = dedup_by_hash(
+        keyed({"x": p2, "y": p2}), seen_k, cols, "timestamp", key_cols=["k"]
+    ).collect()
+    for k, p1_k in (("x", p1), ("y", p1_y)):
+        got = sorted((r["timestamp"], r["event"]) for r in out_k if r["k"] == k)
+        assert got == want(p1_k, p2), k
