@@ -37,13 +37,16 @@ from typing import Any, Callable, Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grove_spark.session import local_frame
+from grove_spark.session import in_list, local_frame
 from grove_spark.state.runstate import RunState, reference
 
 DEFAULT_FREQUENCY = 600  # grove/constants.py:63
 DEFAULT_OPERATION = "all"  # grove/constants.py:57
 # default output streams (grove/models.py:119-124)
 DEFAULT_OUTPUTS = {"logs": "raw", "processed": "processed"}
+# a fleet member's routing key as SQL: its (connector, identity,
+# operation), the full config identity, joined by \x01
+MEMBER_KEY = "concat_ws('\x01', connector, identity, operation)"
 
 
 @dataclass
@@ -468,19 +471,6 @@ def sinks_dim_from_configs(spark: SparkSession, configs: List[ConnectorConfig]) 
     )
 
 
-def sources_dim_from_configs(spark: SparkSession, configs: List[ConnectorConfig]) -> DataFrame:
-    rows = [
-        (c.source, c.connector, c.identity, c.operation, c.frequency, c.delay)
-        for c in configs
-    ]
-    return local_frame(
-        spark,
-        rows,
-        "source string, connector string, identity string, operation string, "
-        "frequency int, delay int",
-    )
-
-
 # A filter naming a routing-dim column. Spark SQL identifiers are
 # case-insensitive (``STREAM`` binds to ``stream``), and ``\b`` also
 # matches a back-quoted name (`` `stream` ``).
@@ -540,35 +530,65 @@ def assemble_fleet(
     (registry.py pointer_kind); each member's watermark predicate and
     seen-hash pointer use its own column, typed natively.
 
-    ONE deduped stream feeds the whole fleet: the scan carries a COARSE
-    pushdown predicate (OR of per-source watermark ranges — the union of
-    what any member still needs), the member-dim enrich fans each row out
-    to every member reading that source, then the EXACT per-member
-    watermark predicate and seen-hash anti-join apply keyed by the FULL
-    config identity (connector, identity, operation). Two identities
-    sharing one source therefore each filter by their OWN state — keying
-    the exact filter on ``source`` alone would let one identity's seen
+    Member state is data, not plan: each member's resume state rides the
+    member dim (a LocalRelation joined on ``source``) as columns — the
+    index of its pointer column (``__pc``), its watermark validated
+    driver-side (dedup.watermark_value, the "does not cast" error) and
+    cast once, inside the dim, to that column's native type (``__wm<i>``,
+    one column per distinct pointer column), and ``__incl``, set when the
+    member has seen hashes (rows AT its watermark are re-read for the
+    anti-join, grove/connectors/__init__.py:627-671). ONE deduped stream
+    then feeds the whole fleet through expressions whose size is set by
+    the distinct pointer columns, never by the member count:
+
+    * the coarse scan predicate ``source IN (<sources>) AND pc >= <lowest
+      watermark>`` (``>`` when no inclusive member sits at the lowest
+      one), pushed to the parquet scan; the bound is added only when
+      every member has a watermark on one shared pointer column;
+    * the member-dim join fans a row out to every member reading its
+      source, one row per (connector, identity, operation);
+    * the exact filter ``wm IS NULL OR pc > wm OR (incl AND pc = wm)``
+      over the joined columns (one such term per pointer column, gated
+      on ``__pc``, when the fleet mixes pointer columns);
+    * the seen-hash anti-join keyed by the FULL identity; its pointer is
+      the shared column, or a CASE over the distinct pointer columns.
+
+    Two identities sharing one source therefore each filter by their OWN
+    state: keying on ``source`` alone would let one identity's seen
     hashes drop boundary rows the other has not ingested (data loss) and
     the lower watermark re-admit rows the other already committed
-    (duplicates).
+    (duplicates). The helper columns are dropped before the anti-join
+    (``__pc`` right after it, which the pointer CASE reads), so the
+    routed rows, their schema and the written files equal those of the
+    per-member predicate form, kept as the spec in
+    tests/test_property_fleet.py.
+
+    Trade-off: the pushed bound is the LOWEST watermark, so one lagging
+    member lowers it for every source. Rows of caught-up sources between
+    that bound and their own watermark are read and then dropped by the
+    exact filter — still exact per member, only the scan's row-group
+    skipping is coarser than a per-source OR of bounds would be.
 
     Routing branches over the shared stream: one raw branch for every
-    member, plus one processed branch per distinct processor chain
-    (chainless members share a single pass-through branch) — branch
-    count is 1 + distinct chains, not 2 per chain group, and every
-    branch derives from ONE scan subtree (persist the shared frame, as
-    run_fleet does, and the source is read once per tick).
+    member, plus one processed branch per distinct reshaping processor
+    chain (chainless members share a single pass-through branch, and a
+    chain of filter_entries steps only is a predicate on that branch) —
+    every branch derives from ONE scan subtree (persist the shared frame,
+    as run_fleet does, and the source is read once per tick).
 
     Plan shape (verified in tests/test_plan_hygiene.py): every join is a
     BroadcastHashJoin, zero Python, the fleet's ``In(source, [...])``
-    predicate reaches the parquet scan as a PushedFilter, and every plan
-    leaf is that scan or a LocalRelation (the member dim, sinks dims and
-    seen hashes are built with ``session.local_frame``).
+    predicate reaches the parquet scan as a PushedFilter, every plan
+    leaf is that scan or a LocalRelation (the member dim, sinks dim and
+    seen hashes are built with ``session.local_frame``), and the Filters'
+    predicate count does not grow with the member count.
     """
     from grove_spark.operators.dedup import (
         ENTRY_HASH_COLS,
         dedup_by_hash,
+        pointer_kind,
         watermark_literal,
+        watermark_value,
     )
     from grove_spark.operators.enrich import enrich
     from grove_spark.operators.processors import apply_chain
@@ -576,6 +596,7 @@ def assemble_fleet(
 
     watermarks = watermarks or {}
     seen_states = seen_states or {}
+    pointer_cols = pointer_cols or {}
 
     # a state key that matches NO member would be silently ignored —
     # and an ignored watermark means a full re-ingest (duplicates), an
@@ -583,7 +604,7 @@ def assemble_fleet(
     # references fail loudly instead.
     refs = {m.reference() for m in configs}
     for label, d in (("watermarks", watermarks), ("seen_states", seen_states),
-                     ("pointer_cols", pointer_cols or {})):
+                     ("pointer_cols", pointer_cols)):
         unknown = set(d) - refs
         if unknown:
             raise ValueError(
@@ -591,82 +612,107 @@ def assemble_fleet(
                 f"(known references: {sorted(refs)})"
             )
 
-    # ---- ONE deduped stream for the whole fleet ---------------------------
-    # per-connector incremental predicate (exact resume, D2/D3).
-    # The watermark literal is cast to the pointer column's native
-    # type (see operators/dedup.watermark_literal): the bare-column
-    # GreaterThan pushes to the parquet scan and numeric sequence
-    # pointers order correctly. Connectors with boundary seen-hashes
-    # use an INCLUSIVE bound + anti-join (exactly-once at the
-    # boundary, grove/connectors/__init__.py:627-671).
-    coarse = None   # source-keyed superset predicate — pushdown-able
-    exact = None    # full-key predicate applied AFTER the enrich fan-out
-    seen_rows = []
-    ptr_case = None  # per-MEMBER pointer string for the seen anti-join
-    pcs = set()  # distinct pointer columns
+    # ---- member state as member-dim columns -------------------------------
+    pcs = sorted({pointer_cols.get(m.reference(), pointer_col) for m in configs})
+    schema = sequences.schema
+    dtypes = {pc: schema[pc].dataType for pc in pcs}
+    wm_cols = [f"__wm{i}" for i in range(len(pcs))]
+    dim_rows, seen_rows, resumed = [], [], []
     for m in configs:
-        pc = (pointer_cols or {}).get(m.reference(), pointer_col)
-        pcs.add(pc)
-        wm = watermarks.get(m.reference())
-        seen = seen_states.get(m.reference(), {})
+        ref = m.reference()
+        pc = pointer_cols.get(ref, pointer_col)
+        wm = watermarks.get(ref)
+        seen = seen_states.get(ref) or {}
+        wms = [None] * len(pcs)
         if wm:
-            lit_wm = watermark_literal(sequences, pc, wm)
-            cmp = F.col(pc) >= lit_wm if seen else F.col(pc) > lit_wm
-        else:
-            cmp = F.lit(True)
-        is_src = F.col("source") == m.source
-        c = is_src & cmp
-        coarse = c if coarse is None else (coarse | c)
-        is_m = (
-            (F.col("connector") == m.connector)
-            & (F.col("identity") == m.identity)
-            & (F.col("operation") == m.operation)
-        )
-        e = is_m & cmp
-        exact = e if exact is None else (exact | e)
+            wms[pcs.index(pc)] = str(wm)
+            value = watermark_value(
+                wm, pointer_kind(dtypes[pc]), f"{pc}'s type {dtypes[pc]}"
+            )
+            resumed.append((value, str(wm), bool(seen)))
+        dim_rows.append((
+            m.source, m.connector, m.identity, m.operation, m.frequency,
+            m.delay, pcs.index(pc), bool(wm) and bool(seen), *wms,
+        ))
         seen_rows += [
             (m.connector, m.identity, m.operation, ptr, h)
             for ptr, hs in seen.items() for h in hs
         ]
-        ptr_case = (F.when if ptr_case is None else ptr_case.when)(
-            is_m, F.col(pc).cast("string")
-        )
-    ded = sequences
-    if coarse is not None:
-        ded = ded.where(coarse)
-    # enrich with the full member dim: a row whose source feeds K members
-    # becomes K rows, one per (connector, identity, operation)
-    ded = enrich(ded, sources_dim_from_configs(spark, configs), on="source")
-    if exact is not None:
-        ded = ded.where(exact)
+    dim = local_frame(
+        spark,
+        dim_rows,
+        "source string, connector string, identity string, operation string, "
+        "frequency int, delay int, __pc int, __incl boolean"
+        + "".join(f", {c} string" for c in wm_cols),
+    )
+    dim = dim.withColumns(
+        {c: F.col(c).cast(dtypes[pc]) for c, pc in zip(wm_cols, pcs)}
+    )
+
+    # ---- ONE deduped stream for the whole fleet ---------------------------
+    # coarse, pushdown-able superset: the members' sources, and on one
+    # shared pointer column with every member resumed, the lowest
+    # watermark (native order; the literal is cast to the column's type
+    # so the comparison lands in PushedFilters)
+    coarse = in_list("source", sorted({m.source for m in configs}))
+    if len(pcs) == 1 and len(resumed) == len(configs):
+        low = min(v for v, _, _ in resumed)
+        low_wm = next(w for v, w, _ in resumed if v == low)
+        lit_low = watermark_literal(sequences, pcs[0], low_wm)
+        inclusive = any(incl for v, _, incl in resumed if v == low)
+        col = F.col(pcs[0])
+        coarse = coarse & (col >= lit_low if inclusive else col > lit_low)
+    ded = enrich(sequences.where(coarse), dim, on="source", how="inner")
+
+    # exact per-member resume (D2/D3), one term per pointer column
+    def since(i, pc):
+        wm, col = F.col(wm_cols[i]), F.col(pc)
+        return wm.isNull() | (col > wm) | (F.col("__incl") & (col == wm))
+
+    if len(pcs) == 1:
+        exact = since(0, pcs[0])
+    else:
+        exact = None
+        for i, pc in enumerate(pcs):
+            term = (F.col("__pc") == i) & since(i, pc)
+            exact = term if exact is None else exact | term
+    ded = ded.where(exact).drop("__incl", *wm_cols)
     if seen_rows:
         # seen state keyed by the full member identity; the md5 gate
         # reads each member's own seen pointers (operators/dedup). Every
         # row left is some member's, so with ONE pointer column the
-        # per-member CASE is just that column.
+        # member's pointer is just that column.
         seen_df = local_frame(
             spark,
             seen_rows,
             "connector string, identity string, operation string, "
             "pointer string, hash string",
         )
+        ptr = pcs[0]
+        if len(pcs) > 1:
+            ptr = F.when(F.col("__pc") == 0, F.col(pcs[0]).cast("string"))
+            for i, pc in enumerate(pcs[1:], 1):
+                ptr = ptr.when(F.col("__pc") == i, F.col(pc).cast("string"))
         ded = dedup_by_hash(
-            ded, seen_df, ENTRY_HASH_COLS,
-            next(iter(pcs)) if len(pcs) == 1 else ptr_case,
+            ded, seen_df, ENTRY_HASH_COLS, ptr,
             key_cols=["connector", "identity", "operation"],
         )
+    ded = ded.drop("__pc")
 
     # ---- routing branches over the SHARED deduped stream ------------------
-    # Sinks dims are keyed by the FULL config identity so same-named
+    # The sinks dim is keyed by the FULL config identity so same-named
     # connectors don't cross-route, and route()'s inner join doubles as
     # the membership filter. Branch count = 1 + one per distinct
-    # non-empty chain (r6; was 1 raw + 1 unchained-processed + chains):
-    # a chainless member's "processed" stream is the deduped rows
-    # UNCHANGED, so its processed sinks ride the same broadcast routing
-    # join as every member's raw sinks — one fewer union arm, one fewer
-    # scan+enrich+anti-join subtree and broadcast build per tick, with a
-    # row multiset identical by construction.
+    # reshaping chain (r6): a chainless member's "processed" stream is the
+    # deduped rows UNCHANGED, so its processed sinks ride the same
+    # broadcast routing join as every member's raw sinks — one fewer
+    # union arm, one fewer scan+enrich+anti-join subtree and broadcast
+    # build per tick, with a row multiset identical by construction.
     route_keys = ["connector", "identity", "operation"]
+
+    def keys_of(members):
+        return ["\x01".join([m.connector, m.identity, m.operation]) for m in members]
+
     groups: Dict[str, List[ConnectorConfig]] = {}
     for cfg in configs:
         groups.setdefault(cfg.chain_key(), []).append(cfg)
@@ -686,30 +732,24 @@ def assemble_fleet(
             # processed rows) removes the group's union arm entirely:
             # same rows, one fewer scan+enrich+anti-join subtree and
             # broadcast build per tick (r6).
-            keys = [
-                "\x01".join([m.connector, m.identity, m.operation])
-                for m in members
-            ]
-            pred_groups.append((drop, keys))
+            pred_groups.append((drop, keys_of(members)))
             chainless += members  # processed sinks join the shared dim
         else:
             chained.append((chain, members))
-    key_lit = F.concat_ws("\x01", *route_keys)
+    # one sinks dim per tick; each routing join takes its filtered view
+    # (a Filter over a LocalRelation, folded into it by the optimizer)
     all_sinks = sinks_dim_from_configs(spark, configs)
-    dim_key = F.concat_ws("\x01", "connector", "identity", "operation")
-    chainless_keys = [
-        "\x01".join([m.connector, m.identity, m.operation]) for m in chainless
-    ]
+    chainless_keys = keys_of(chainless)
     base_dim = all_sinks.where(
         (F.col("stream") != "processed")
-        | (F.lit(bool(chainless_keys)) & dim_key.isin(chainless_keys))
+        | in_list(MEMBER_KEY, chainless_keys)
     )
     base = route(ded, base_dim, connector_col=route_keys, raw_col="tokens")
     if pred_groups:
         gate = None
         for drop, keys in pred_groups:
             g = (
-                key_lit.isin(keys)
+                in_list(MEMBER_KEY, keys)
                 & (F.col("stream") == "processed")
                 & F.coalesce(drop, F.lit(False))
             )
@@ -717,14 +757,14 @@ def assemble_fleet(
         base = base.where(~gate)
     branches = [base]
     for chain, members in chained:
-        proc_sinks = sinks_dim_from_configs(spark, members).where(
-            F.col("stream") == "processed"
+        keys = keys_of(members)
+        proc_sinks = all_sinks.where(
+            (F.col("stream") == "processed") & in_list(MEMBER_KEY, keys)
         )
         # pre-filter to the group's members BEFORE the chain: fan-out
         # processors (split_path) must not run over foreign rows that
         # the routing join would drop anyway
-        keys = ["\x01".join([m.connector, m.identity, m.operation]) for m in members]
-        processed = apply_chain(ded.where(key_lit.isin(keys)), chain)
+        processed = apply_chain(ded.where(in_list(MEMBER_KEY, keys)), chain)
         branches.append(
             route(processed, proc_sinks, connector_col=route_keys, raw_col="tokens")
         )
@@ -849,7 +889,19 @@ def run_fleet(
     watermarks, write, then commit each connector's new pointer +
     metrics in the shared manifest. ``pointer_cols`` (reference ->
     column) supports heterogeneous pointer columns — timestamp and
-    numeric-sequence connectors resume side by side in one tick."""
+    numeric-sequence connectors resume side by side in one tick.
+
+    The tick reads the source ONCE, through
+    ``sources/scans.incremental_scan``. When every due member has a
+    committed pointer and all share one pointer column, that scan is
+    pruned (``prune=True, inclusive=True``, footer stats cached under
+    ``<state>/filestats``) at the LOWEST due watermark, compared in the
+    column's native order: the files it reads stop growing with the
+    history. A member with no pointer yet (a new connector) needs the
+    whole history, and mixed pointer columns share no bound, so either
+    reads unpruned. The pruning decision, ``{files_kept, files_total}``,
+    is the report's ``scan`` (None when unpruned) and is committed in
+    each due member's ``metrics["scan"]``, as run_incremental does."""
     from grove_spark.sources.scans import incremental_scan
 
     now = time.time() if now is None else now
@@ -860,11 +912,34 @@ def run_fleet(
 
     pointer_cols = pointer_cols or {}
     pc_of = {c.reference(): pointer_cols.get(c.reference(), pointer_col) for c in due}
-    # unpruned: members resume from different watermarks (and pointer
-    # columns); the per-member predicates live in assemble_fleet
-    sequences = incremental_scan(spark, sequences_path, pointer_col)
     watermarks = {c.reference(): state.pointer(c.reference()) for c in due}
     seen_states = {c.reference(): state.seen_hashes(c.reference()) for c in due}
+    # ONE scan per tick, pruned to the files that can hold rows at or
+    # past the LOWEST due watermark when every due member resumes on one
+    # shared pointer column; the exact per-member predicates live in
+    # assemble_fleet. A member with no pointer yet needs the whole
+    # history, and mixed pointer columns share no bound: unpruned.
+    pcs = set(pc_of.values())
+    scan_pc = next(iter(pcs)) if len(pcs) == 1 else pointer_col
+    low = stats_cache = None
+    if len(pcs) == 1 and all(watermarks.values()):
+        from grove_spark.operators.dedup import watermark_value
+        from grove_spark.sources.file_stats import FileStatsCache
+
+        stats_cache = FileStatsCache(os.path.join(state.root, "filestats"))
+        stats = stats_cache.stats_for(sequences_path, scan_pc)
+        # the footer stats' kind orders the watermarks natively, as the
+        # pruner compares them (numeric "10" > "9")
+        kind = next((e.get("kind") for e in stats.values()), "str")
+        low = min(
+            watermarks.values(),
+            key=lambda w: watermark_value(w, kind, f"{scan_pc}'s {kind} stats"),
+        )
+    sequences = incremental_scan(
+        spark, sequences_path, scan_pc, low,
+        prune=low is not None, inclusive=True, stats_cache=stats_cache,
+    )
+    scan = getattr(sequences, "_grove_prune", None)
     routed, deduped = assemble_fleet(
         spark, due, sequences, watermarks, pointer_col,
         seen_states=seen_states, return_deduped=True,
@@ -890,7 +965,7 @@ def run_fleet(
     # Grouping on connector alone would cross-contaminate multi-identity
     # fleets of the same connector: one identity's max pointer would be
     # committed as the other's watermark (silent data loss). The identity
-    # and operation columns ride the sources-dim enrich, so every
+    # and operation columns ride the member-dim join, so every
     # aggregate below groups on the full key. Max pointer is computed on
     # the NATIVE column type, stringified only at the manifest boundary —
     # max(cast-to-string) mis-orders numeric sequence pointers.
@@ -898,7 +973,6 @@ def run_fleet(
     # one aggregation PER DISTINCT POINTER COLUMN (usually one): a mixed
     # fleet cannot take max over a single shared column without casting
     # to string, which mis-orders numeric pointers
-    key_expr = F.concat_ws("\x01", *key_cols)
 
     def keys_for(pc):
         return [
@@ -906,11 +980,11 @@ def run_fleet(
             for c in due if pc_of[c.reference()] == pc
         ]
 
-    distinct_pcs = sorted(set(pc_of.values()))
+    distinct_pcs = sorted(pcs)
     stats = []
     for pc in distinct_pcs:
         sub = routed if len(distinct_pcs) == 1 else routed.where(
-            key_expr.isin(keys_for(pc))
+            in_list(MEMBER_KEY, keys_for(pc))
         )
         stats += (
             sub.groupBy(*key_cols, "descriptor")
@@ -954,7 +1028,7 @@ def run_fleet(
     brows: Dict[str, list] = {}
     for pc in distinct_pcs if stats else []:
         sub = deduped if len(distinct_pcs) == 1 else deduped.where(
-            key_expr.isin(keys_for(pc))
+            in_list(MEMBER_KEY, keys_for(pc))
         )
         for r in boundary_hashes(sub, ENTRY_HASH_COLS, pc, key_cols).collect():
             brows.setdefault(row_key(r), []).append(r)
@@ -971,7 +1045,10 @@ def run_fleet(
                 "key": ref,
                 "pointer": ptr,
                 "seen": seen,
-                "metrics": {"per_sink": (got or {}).get("per_sink", {})},
+                "metrics": {
+                    "per_sink": (got or {}).get("per_sink", {}),
+                    **({"scan": scan} if scan is not None else {}),
+                },
                 "data_paths": data_paths if got else [],
             }
         )
@@ -987,6 +1064,6 @@ def run_fleet(
         for cfg in due if cfg.reference() in per_key
     }
     return {
-        "due": len(due), "run_id": run_id,
+        "due": len(due), "run_id": run_id, "scan": scan,
         "per_connector": per_connector, "per_key": per_key,
     }

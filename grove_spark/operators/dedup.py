@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from grove_spark.functions.hashing import entry_hash
+from grove_spark.session import in_list
 
 # the sequences table's entry-hash columns, in canonical JSON key order
 ENTRY_HASH_COLS = ("doc_id", "tokens")
@@ -70,9 +71,11 @@ def dedup_by_hash(
     still decides which rows drop, so a row at ANOTHER key's seen pointer
     is hashed and survives. (A keyed gate, ``key = k AND pointer IN
     (...)`` per key, costs ~15 py4j Column calls per key: ~0.2 s of
-    driver time per 12-member fleet tick on 4 cores.) A per-row pointer
-    Column is projected as ``__p`` first and the gate reads ``__p``, so
-    the CASE is evaluated once a row. The seen frame is driver-local
+    driver time per 12-member fleet tick on 4 cores.) The pointer is
+    projected as ``__p`` first and the gate reads ``__p``, so a per-row
+    pointer CASE is evaluated once a row; the ``IN`` list is one parsed
+    predicate (``session.in_list``), so the plan-build cost does not grow
+    with the number of seen pointers. The seen frame is driver-local
     (``session.local_frame`` over the manifest JSON), so collecting its
     pointers here starts no Spark job. A null/unseen-pointer row gets a
     null ``__h``, which never equals, so it survives — as a computed hash
@@ -87,14 +90,10 @@ def dedup_by_hash(
     ptrs = sorted({r["__p"] for r in seen2.select("__p").collect()} - {None})
     if not ptrs:
         return df  # empty seen-state: the anti-join kept every row
-    if isinstance(pointer, str):
-        p = F.col(pointer).cast("string")
-    else:
-        df = df.withColumn("__p", pointer.cast("string"))
-        p = F.col("__p")
-    hashed = df.withColumn(
-        "__h", F.when(p.isin(ptrs), entry_hash(hash_cols))
-    ).withColumn("__p", p)
+    p = F.col(pointer) if isinstance(pointer, str) else pointer
+    hashed = df.withColumn("__p", p.cast("string")).withColumn(
+        "__h", F.when(in_list("__p", ptrs), entry_hash(hash_cols))
+    )
     return hashed.join(
         F.broadcast(seen2), [*key_cols, "__p", "__h"], "left_anti"
     ).drop("__p", "__h")
@@ -150,6 +149,52 @@ def advance_seen(
     return ptr, {ptr: sorted(keep)}
 
 
+def pointer_kind(dtype) -> str:
+    """The ordering of a pointer column's type, in the vocabulary of the
+    file stats (sources/file_stats): ``num``, ``ts`` or ``str``."""
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, T.NumericType):
+        return "num"
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        return "ts"
+    return "str"
+
+
+def watermark_value(pointer: str, kind: str, target: str):
+    """A stored watermark string validated and parsed DRIVER-side into
+    its column's native order (``kind`` as from ``pointer_kind``): an int
+    or float for numeric pointers (Python compares the two exactly), a
+    naive UTC datetime for time pointers, the string itself otherwise.
+    Comparing these values picks the lowest of several watermarks
+    without a Spark job. ``target`` names the column and type for the
+    error.
+
+    A pointer that cannot cast (schema drift, corrupted manifest) would
+    otherwise become a NULL literal, turning every incremental scan into
+    a silent permanent zero-row no-op: it raises instead."""
+    import datetime as dt
+
+    s = str(pointer)
+    try:
+        if kind == "num":
+            try:
+                return int(s)
+            except ValueError:
+                return float(s)
+        if kind == "ts":
+            v = dt.datetime.fromisoformat(s.replace("Z", "+00:00").replace(" ", "T"))
+            if v.tzinfo is not None:
+                v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+            return v
+    except ValueError as err:
+        raise ValueError(
+            f"watermark {s!r} does not cast to {target} — "
+            "refusing a NULL comparison that would silently scan zero rows"
+        ) from err
+    return s
+
+
 def watermark_literal(df: DataFrame, pointer_col: str, pointer: str):
     """A watermark literal cast to the pointer COLUMN's native type.
 
@@ -164,28 +209,11 @@ def watermark_literal(df: DataFrame, pointer_col: str, pointer: str):
     timestamp ordering is native. Genuinely opaque string cursors hit the
     StringType branch and compare as strings, unchanged.
 
-    The cast is validated DRIVER-side first: a stored pointer that cannot
-    cast to the column's type (schema drift, corrupted manifest) would
-    otherwise become a NULL literal, turning every incremental scan into
-    a silent permanent zero-row no-op.
+    The cast is validated DRIVER-side first (``watermark_value``).
     """
-    from pyspark.sql import types as T
-
     dtype = df.schema[pointer_col].dataType
-    s = str(pointer)
-    try:
-        if isinstance(dtype, T.NumericType):
-            float(s)
-        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-            import datetime as dt
-
-            dt.datetime.fromisoformat(s.replace("Z", "+00:00").replace(" ", "T"))
-    except ValueError as err:
-        raise ValueError(
-            f"watermark {s!r} does not cast to {pointer_col}'s type {dtype} — "
-            "refusing a NULL comparison that would silently scan zero rows"
-        ) from err
-    return F.lit(s).cast(dtype)
+    watermark_value(pointer, pointer_kind(dtype), f"{pointer_col}'s type {dtype}")
+    return F.lit(str(pointer)).cast(dtype)
 
 
 def dedup_by_pointer(

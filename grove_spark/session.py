@@ -96,3 +96,21 @@ def local_frame(spark: SparkSession, rows, schema):
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def in_list(expr: str, values):
+    """``<expr> IN (<values>)`` over string ``values``, built from ONE SQL
+    string. ``Column.isin`` crosses to the JVM once per value (a literal
+    and a Seq element each), so an IN list of fleet members or seen
+    pointers costs plan-build time that grows with the list; parsed, the
+    same ``In`` predicate costs one call. ``expr`` is SQL text (a column
+    name, a cast); the values are quoted as SQL string literals. An
+    empty list is ``false``."""
+    from pyspark.sql import functions as F
+
+    if not values:
+        return F.lit(False)
+    quoted = ", ".join(
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
+    )
+    return F.expr(f"{expr} IN ({quoted})")

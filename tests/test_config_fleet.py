@@ -617,3 +617,207 @@ def test_filter_only_chain_compiles_to_predicate(spark, fixture_dir):
         })
         with pytest.raises(AnalysisException):
             assemble_fleet(spark, [cfg], seq)
+
+
+# ---- the fleet tick's pruned scan ------------------------------------------
+
+
+def _history(tmp_path, n=300):
+    """A private copy of the fixture history (the tests append to it)."""
+    return write_fixture(str(tmp_path / "fx"), n)["sequences"]
+
+
+def _append_batch(seq, k, n=300):
+    """Batch k: fresh doc ids, event times k days past the history."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from grove_spark.fixtures.generator import gen_sequences
+
+    schema = pq.read_schema(os.path.join(seq, "part-00000.parquet"))
+    df = gen_sequences(n, seed=100 + k)
+    df["event_time"] = df["event_time"] + pd.Timedelta(days=k)
+    df["doc_id"] = f"b{k}-" + df["doc_id"]
+    tbl = pa.Table.from_pandas(df, preserve_index=False).cast(schema)
+    pq.write_table(tbl, os.path.join(seq, f"batch-{k:03d}.parquet"))
+    return df
+
+
+def _fleet(*specs):
+    """(connector, identity, source, frequency) -> configs."""
+    return [
+        ConnectorConfig(connector=c, identity=i, source=s, frequency=f)
+        for c, i, s, f in specs
+    ]
+
+
+def _scan_metrics(state, run_id):
+    """Committed metrics["scan"] per member key of one run (manifest)."""
+    return {
+        rec["key"]: rec["metrics"].get("scan")
+        for rec in state._run_records() if rec["run_id"] == run_id
+    }
+
+
+def _logs(r, cfg):
+    return r["per_key"].get(cfg.reference(), {}).get("per_sink", {}).get("logs", {}).get("rows", 0)
+
+
+def test_run_fleet_pruned_tick_equals_unpruned(spark, tmp_path, monkeypatch):
+    """Once every member has a pointer, a tick reads only the files past
+    the lowest watermark (the boundary file and the new batch) and
+    commits exactly what an unpruned tick commits: per-key counts,
+    pointers, seen hashes and written rows. The pruning decision is in
+    the tick report and in each member's committed metrics."""
+    import shutil
+
+    from grove_spark.sources import scans
+
+    seq = _history(tmp_path)
+    cfgs = _fleet(
+        ("okta_system_log", "a", "okta", 0),
+        ("github_audit", "a", "github", 0),
+        ("github_audit", "b", "github", 0),  # two identities on one source
+    )
+    state = RunState(str(tmp_path / "state"))
+    r = run_fleet(spark, cfgs, seq, state, out_path=str(tmp_path / "out"), now=1.0)
+    assert r["scan"] is None  # no pointers yet: the whole history
+    _append_batch(seq, 1)
+    run_fleet(spark, cfgs, seq, state, out_path=str(tmp_path / "out"), now=2.0)
+    _append_batch(seq, 2)
+    shutil.copytree(tmp_path / "state", tmp_path / "state_unpruned")
+
+    pruned = run_fleet(spark, cfgs, seq, state, out_path=str(tmp_path / "out"), now=3.0)
+    assert pruned["scan"] == {"files_kept": 2, "files_total": 3}
+    assert _scan_metrics(state, pruned["run_id"]) == {
+        c.reference(): pruned["scan"] for c in cfgs
+    }
+
+    real_scan = scans.incremental_scan
+
+    def unpruned_scan(*a, **kw):
+        return real_scan(*a, **{**kw, "prune": False})
+
+    monkeypatch.setattr(scans, "incremental_scan", unpruned_scan)
+    state_u = RunState(str(tmp_path / "state_unpruned"))
+    full = run_fleet(spark, cfgs, seq, state_u, out_path=str(tmp_path / "out_u"), now=3.0)
+    assert full["scan"] is None
+    assert pruned["per_key"] == full["per_key"] and pruned["per_key"]
+    for c in cfgs:
+        ref = c.reference()
+        assert state.pointer(ref) == state_u.pointer(ref)
+        assert state.seen_hashes(ref) == state_u.seen_hashes(ref)
+
+    def written(out, run_id):
+        df = spark.read.parquet(f"{out}/part-{run_id}")
+        return sorted(
+            tuple(r) for r in df.select("doc_id", "connector", "identity", "descriptor").collect()
+        )
+
+    rows = written(tmp_path / "out", pruned["run_id"])
+    assert rows == written(tmp_path / "out_u", full["run_id"])
+    assert rows and all(d.startswith("b2-") for d, *_ in rows)
+
+
+def test_run_fleet_new_member_reads_whole_history(spark, tmp_path):
+    """A member added with no pointer forces an unpruned scan and
+    catches up the whole history; the resumed member still commits only
+    the new batch."""
+    seq = _history(tmp_path)
+    old = _fleet(("okta_system_log", "a", "okta", 0))
+    state = RunState(str(tmp_path / "state"))
+    run_fleet(spark, old, seq, state, now=1.0)
+    b1 = _append_batch(seq, 1)
+    assert run_fleet(spark, old, seq, state, now=2.0)["scan"] is not None
+    b2 = _append_batch(seq, 2)
+    new = _fleet(("github_audit", "a", "github", 0))
+    r = run_fleet(spark, old + new, seq, state, now=3.0)
+    assert r["scan"] is None
+    hist = spark.read.parquet(os.path.join(seq, "part-00000.parquet"))
+    n_github = (
+        hist.where("source = 'github'").count()
+        + int((b1["source"] == "github").sum()) + int((b2["source"] == "github").sum())
+    )
+    assert _logs(r, new[0]) == n_github
+    assert _logs(r, old[0]) == int((b2["source"] == "okta").sum())
+    assert _scan_metrics(state, r["run_id"]) == {
+        c.reference(): None for c in old + new
+    }
+
+
+def test_run_fleet_lagging_member_keeps_older_files(spark, tmp_path):
+    """The scan is pruned at the LOWEST due watermark: a member that was
+    not due for a while keeps the older files it still needs, and both
+    members commit exactly their own new rows."""
+    seq = _history(tmp_path)
+    fast, slow = _fleet(
+        ("okta_system_log", "a", "okta", 0),
+        ("github_audit", "a", "github", 100),
+    )
+    state = RunState(str(tmp_path / "state"))
+    run_fleet(spark, [fast, slow], seq, state, now=1.0)
+    _append_batch(seq, 1)
+    run_fleet(spark, [fast, slow], seq, state, now=200.0)
+    b2 = _append_batch(seq, 2)
+    r = run_fleet(spark, [fast, slow], seq, state, now=201.0)  # slow not due
+    assert r["due"] == 1 and r["scan"] == {"files_kept": 2, "files_total": 3}
+    b3 = _append_batch(seq, 3)
+    r = run_fleet(spark, [fast, slow], seq, state, now=400.0)
+    # the slow member resumes from batch 1: batch 1 (its boundary), 2 and
+    # 3 are read, the history is skipped
+    assert r["scan"] == {"files_kept": 3, "files_total": 4}
+    assert _logs(r, slow) == int((b2["source"] == "github").sum()) + int(
+        (b3["source"] == "github").sum()
+    )
+    assert _logs(r, fast) == int((b3["source"] == "okta").sum())
+
+
+def test_run_fleet_mixed_pointer_columns_stay_unpruned(spark, tmp_path):
+    """Members resuming on different pointer columns share no bound: the
+    tick reads unpruned and each member still resumes from its own
+    pointer."""
+    seq = _history(tmp_path)
+    ts_m, num_m = _fleet(
+        ("okta_system_log", "a", "okta", 0),
+        ("github_audit", "a", "github", 0),
+    )
+    pcs = {num_m.reference(): "n_tok"}
+    state = RunState(str(tmp_path / "state"))
+    run_fleet(spark, [ts_m, num_m], seq, state, now=1.0, pointer_cols=pcs)
+    b1 = _append_batch(seq, 1)
+    r = run_fleet(spark, [ts_m, num_m], seq, state, now=2.0, pointer_cols=pcs)
+    assert r["scan"] is None
+    assert _logs(r, ts_m) == int((b1["source"] == "okta").sum())
+    assert set(_scan_metrics(state, r["run_id"]).values()) == {None}
+
+
+def test_member_names_with_quotes_route(spark, fixture_dir):
+    """Member keys reach the plan as quoted SQL literals (one parsed IN
+    per list): identities holding quotes and backslashes still route
+    through the raw, filter-only and reshaping branches."""
+    seq = spark.read.parquet(fixture_dir["sequences"])
+    odd = ["o'brien", "back\\slash", "both\\'"]
+    cfgs = [
+        ConnectorConfig(connector="okta_system_log", identity=odd[0], source="okta"),
+        ConnectorConfig(
+            connector="okta_system_log", identity=odd[1], source="okta",
+            processors=[{"processor": "filter_entries", "filters": ["sql:n_tok < 20"]}],
+        ),
+        ConnectorConfig(
+            connector="okta_system_log", identity=odd[2], source="okta",
+            processors=[{"processor": "filter_paths", "paths": ["raw"]}],
+        ),
+    ]
+    routed = assemble_fleet(spark, cfgs, seq)
+    counts = {
+        (r["identity"], r["descriptor"]): r["count"]
+        for r in routed.groupBy("identity", "descriptor").count().collect()
+    }
+    n = seq.where("source = 'okta'").count()
+    kept = seq.where("source = 'okta' AND NOT n_tok < 20").count()
+    assert counts == {
+        (odd[0], "logs"): n, (odd[0], "processed"): n,
+        (odd[1], "logs"): n, (odd[1], "processed"): kept,
+        (odd[2], "logs"): n, (odd[2], "processed"): n,
+    }

@@ -280,6 +280,68 @@ def test_fleet_plan_hygiene(spark, loaded):
         assert hs and all(h.count("CASE WHEN") == 1 for h in hs), hs
 
 
+def _filter_predicates(df) -> int:
+    """Predicate nodes (And, Or, Not, comparisons, In/InSet, IsNull ...)
+    in the conditions of the optimized plan's Filters. Literals and
+    column references are not predicates: an IN list's length does not
+    count, a per-member OR branch does."""
+    jvm = df._sc._jvm
+    pred = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.Predicate"
+    )
+
+    def walk(node, expr):
+        n = (1 if pred.isInstance(node) else 0) if expr else (
+            walk(node.condition(), True) if node.nodeName() == "Filter" else 0
+        )
+        ch = node.children()
+        return n + sum(walk(ch.apply(i), expr) for i in range(ch.size()))
+
+    return walk(df._jdf.queryExecution().optimizedPlan(), False)
+
+
+def test_fleet_plan_size_independent_of_member_count(spark, loaded):
+    """Member state is member-dim data: a 12-member and a 48-member fleet
+    with the same chain mix (chainless, filter-only, reshaping) and the
+    same pointer-column mix have equally many predicate nodes in their
+    Filters, with one pointer column and with mixed ones. The source set
+    still reaches the scan as a PushedFilter."""
+    from grove_spark.config import ConnectorConfig, assemble_fleet
+    from grove_spark.fixtures.generator import SOURCE_NAMES
+
+    seq, _, _ = loaded
+
+    def fleet(n, mixed):
+        cfgs, wms, seen, pcs = [], {}, {}, {}
+        for i in range(n):
+            if i % 4 == 1:
+                procs = [{"processor": "filter_entries", "filters": ["sql:n_tok < 20"]}]
+            elif i in (2, 3):
+                procs = [{"processor": "filter_paths", "paths": ["raw"]}]
+            else:
+                procs = []
+            cfg = ConnectorConfig(
+                connector=f"c{i}_audit", identity=f"id{i}",
+                source=SOURCE_NAMES[i % len(SOURCE_NAMES)], processors=procs,
+            )
+            ref = cfg.reference()
+            cfgs.append(cfg)
+            if mixed and i % 5 == 0:
+                pcs[ref], wms[ref] = "n_tok", str(i % 7)
+            else:
+                wms[ref] = f"2024-01-01 00:00:{i % 50:02d}"
+            if i % 3 == 0:
+                seen[ref] = {wms[ref]: [f"{i:032d}"]}
+        return assemble_fleet(
+            spark, cfgs, seq, wms, seen_states=seen, pointer_cols=pcs
+        )
+
+    for mixed in (False, True):
+        small, big = fleet(12, mixed), fleet(48, mixed)
+        assert _filter_predicates(small) == _filter_predicates(big), mixed
+        assert "In(source" in _pushed_filters(plan_of(big)), mixed
+
+
 def test_resume_protocol_has_one_implementation():
     """The resume protocol (pruned watermark scan, seen-hash anti-join,
     boundary hashes) lives in sources/ and operators/dedup.py; the
