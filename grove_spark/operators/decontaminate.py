@@ -9,13 +9,16 @@ is Spark-first from scratch.
 
 Scale shape (the 100 TB plan):
 
-* corpus shingles are a per-row explode — embarrassingly parallel, no
-  shuffle until the aggregation;
+* corpus grams are hashed per row by an Arrow kernel
+  (``dedup_fuzzy.hashed_gram_rows``: gram byte ranges hashed off the
+  string buffer, one row per distinct gram id) — embarrassingly
+  parallel, no shuffle until the aggregation. It is the only corpus-side
+  form; its expression twin is a spec under ``tests/``;
 * the benchmark side is DISTINCT-ed and hashed to 64-bit ids, so the
   probe join moves 8-byte longs, never gram text. Benchmarks are tiny
   next to a training corpus (10^6-10^7 grams vs 10^12), so the gram set
   broadcasts and the corpus side NEVER shuffles for the join — the whole
-  job is scan → explode → broadcast-probe → partial-agg groupBy(doc).
+  job is scan → gram kernel → broadcast-probe → partial-agg groupBy(doc).
   For a benchmark too big to broadcast, pass ``broadcast_benchmark=
   False`` to fall back to a shuffle equi-join on the hash;
 * per-doc counts aggregate map-side (groupBy on doc_id after the join
@@ -31,7 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grove_spark.operators.dedup_fuzzy import _distinct_grams, word_shingles
+from grove_spark.operators.dedup_fuzzy import (
+    _distinct_grams,
+    hashed_gram_rows,
+    word_shingles,
+)
 
 
 def _bench_grams(benchmark: DataFrame, text_col: str, n: int) -> DataFrame:
@@ -53,7 +60,6 @@ def contamination_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_benchmark: bool = True,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Per-document n-gram overlap with the benchmark set.
 
@@ -63,52 +69,17 @@ def contamination_scores(
     expected to be unique per row (the universal doc-table contract;
     duplicated ids collapse to one output row).
     """
-    # Plan shape (r6): gram construction + hashing was measured at ~16 s
-    # of the 17.7 s 1M-doc leg (the join + aggregate tail is ~1.7 s), so
-    # the win is hashing gram BYTE RANGES straight off the Arrow string
-    # buffer (dedup_fuzzy.hashed_gram_rows — no gram strings, no
-    # Catalyst array churn) in ONE pass that also carries the per-doc
-    # distinct-gram count. explode_outer semantics in that frame keep
-    # gramless docs as a null-gram row, so the per-doc aggregate covers
-    # every document and the old join-back to ``docs`` disappears too.
-    # Values are unchanged: same distinct grams, same xxhash64 ids.
-    # ``engine="catalyst"`` keeps the r5 exploded-string plan — at
-    # gate-scale inputs (thousands of docs) the Arrow stage's fixed
-    # setup costs more than it saves. Same values either way.
+    # Gram construction + hashing was measured at ~16 s of the 17.7 s
+    # 1M-doc leg (the join + aggregate tail is ~1.7 s), so the corpus
+    # side hashes gram BYTE RANGES straight off the Arrow string buffer
+    # (dedup_fuzzy.hashed_gram_rows — no gram strings, no Catalyst array
+    # churn) in ONE pass that also carries the per-doc distinct-gram
+    # count. explode_outer semantics in that frame keep gramless docs as
+    # a null-gram row, so the per-doc aggregate covers every document
+    # with no join back to ``docs``.
     bench = _bench_grams(benchmark, text_col, n)
     if broadcast_benchmark:
         bench = F.broadcast(bench)
-    if engine == "catalyst":
-        sh = word_shingles(docs.select(id_col, text_col), text_col, n).select(
-            F.col(id_col).alias("__doc"), F.xxhash64("shingle").alias("__g")
-        )
-        per_doc = (
-            sh.join(bench, "__g", "left")
-            .groupBy("__doc")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_grams"),
-                F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
-                .cast("bigint")
-                .alias("n_contaminated"),
-            )
-        )
-        out = docs.select(id_col).join(
-            per_doc.withColumnRenamed("__doc", id_col), id_col, "left"
-        )
-        n_grams = F.coalesce(F.col("n_grams"), F.lit(0).cast("bigint"))
-        n_cont = F.coalesce(
-            F.col("n_contaminated"), F.lit(0).cast("bigint")
-        )
-        return out.select(
-            id_col,
-            n_grams.alias("n_grams"),
-            n_cont.alias("n_contaminated"),
-            F.when(n_grams > 0, n_cont.cast("double") / n_grams)
-            .otherwise(F.lit(0.0))
-            .alias("contaminated_frac"),
-        )
-    from grove_spark.operators.dedup_fuzzy import hashed_gram_rows
-
     rows = hashed_gram_rows(docs, n, id_col, text_col)
     n_grams = F.max("__n").cast("bigint")
     n_cont = F.sum(F.coalesce(F.col("__hit"), F.lit(0))).cast("bigint")

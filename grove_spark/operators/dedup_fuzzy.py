@@ -4,9 +4,10 @@ Spark-first implementations over a ``documents(doc_id, text, ...)`` table:
 
 * exact        — hash groupBy (operators/dedup.py)
 * n-gram Jaccard — shingle explode + self-join on shingle + count ratio
-* MinHash + LSH  — k hash functions over shingles (all JVM-side xxhash64
-  with per-function seeds), banded into buckets, candidate pairs from
-  bucket joins, optional exact-Jaccard verification
+* MinHash + LSH  — k hash functions over shingles (Spark's xxhash64 with
+  per-function seeds, computed by a vectorized Arrow kernel), banded
+  into buckets, candidate pairs from bucket joins, optional
+  exact-Jaccard verification
 * SimHash      — 64-bit sign-aggregated token hashes, hamming buckets
 * embedding cosine near-dup — normalized-vector dot via zip_with, LSH
   random-hyperplane buckets for the scale path (see similarity.py)
@@ -26,13 +27,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _distinct_grams(text_col: str, n: int):
     """DISTINCT word n-gram shingle array for one document row — THE
-    shingle definition, shared by signature generation (word_shingles)
-    and verify (hashed_shingle_sets) so the two can never disagree on
-    what a shingle is.
+    shingle definition. The expression paths (word_shingles, the
+    benchmark gram set, streaming decontamination) build on it, and the
+    Arrow gram kernels (hashed_shingle_sets, hashed_gram_rows,
+    minhash_signatures) are tested against specs built on it, so no two
+    operators disagree on what a shingle is.
 
     Documents with fewer than ``n`` words yield an empty array —
     guarded explicitly: ``sequence(0, k-1)`` with k=0 yields a
@@ -65,7 +70,6 @@ def hashed_shingle_sets(
     id_col: str = "doc_id",
     text_col: str = "text",
     out: str = "sh_set",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Per-document DISTINCT word-n-gram shingle set, hashed to 64-bit
     ints, as ONE row per doc: (doc, array<bigint>).
@@ -78,46 +82,40 @@ def hashed_shingle_sets(
     strings up to xxhash64 collisions (~n_shingles²/2⁶⁴ per doc).
     Documents with fewer than ``n`` words yield an empty set (kept).
 
-    ``engine="arrow"`` (default) hashes gram byte-ranges off the Arrow
-    string buffer (the r6 kernel — same xxhash64 values, no gram
-    strings); consumers use the set algebraically (intersect/size), so
-    the kernel's sorted order vs Catalyst's first-occurrence order is
-    immaterial. ``engine="catalyst"`` keeps the expression form."""
-    if engine == "arrow":
-        from pyspark.sql import types as T
-        from pyspark.sql.pandas.types import to_arrow_schema
+    An Arrow kernel hashes gram byte-ranges off the string buffer (same
+    xxhash64 values as ``F.xxhash64`` over ``_distinct_grams``, no gram
+    strings; the expression form is the spec in
+    ``tests/test_dedup_fuzzy.py``). Sets come out sorted by signed hash;
+    consumers use them algebraically (intersect/size), so the order is
+    immaterial."""
+    out_schema = T.StructType([
+        T.StructField("doc", docs.schema[id_col].dataType),
+        T.StructField(out, T.ArrayType(T.LongType())),
+    ])
+    arrow_schema = to_arrow_schema(out_schema)
 
-        out_schema = T.StructType([
-            T.StructField("doc", docs.schema[id_col].dataType),
-            T.StructField(out, T.ArrayType(T.LongType())),
-        ])
-        arrow_schema = to_arrow_schema(out_schema)
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
 
-        def kernel(batches):
-            import numpy as np
-            import pyarrow as pa
+        for rb in batches:
+            m = rb.num_rows
+            if not m:
+                continue
+            dh, _, kd = _distinct_gram_hashes(rb.column(1), n)
+            offs = np.zeros(m + 1, dtype=np.int64)
+            np.cumsum(kd, out=offs[1:])
+            arr = pa.ListArray.from_arrays(
+                pa.array(offs, pa.int32()), pa.array(dh, pa.int64())
+            )
+            ids = rb.column(0)
+            if isinstance(ids, pa.ChunkedArray):
+                ids = ids.combine_chunks()
+            yield pa.RecordBatch.from_arrays(
+                [ids, arr], schema=arrow_schema
+            )
 
-            for rb in batches:
-                m = rb.num_rows
-                if not m:
-                    continue
-                dh, _, kd = _distinct_gram_hashes(rb.column(1), n)
-                offs = np.zeros(m + 1, dtype=np.int64)
-                np.cumsum(kd, out=offs[1:])
-                arr = pa.ListArray.from_arrays(
-                    pa.array(offs, pa.int32()), pa.array(dh, pa.int64())
-                )
-                ids = rb.column(0)
-                if isinstance(ids, pa.ChunkedArray):
-                    ids = ids.combine_chunks()
-                yield pa.RecordBatch.from_arrays(
-                    [ids, arr], schema=arrow_schema
-                )
-
-        return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
-
-    hashed = F.transform(_distinct_grams(text_col, n), lambda g: F.xxhash64(g))
-    return docs.select(F.col(id_col).alias("doc"), hashed.alias(out))
+    return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
 
 
 def ngram_jaccard_pairs(
@@ -422,7 +420,6 @@ def hashed_gram_rows(
     n: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """One row per (document, DISTINCT word-n-gram xxhash64 id):
     ``(id_col, __n bigint, __g bigint)`` where ``__n`` is the document's
@@ -431,60 +428,48 @@ def hashed_gram_rows(
     explode_outer semantics, so per-doc aggregates downstream cover
     every input document without a join back to ``docs``.
 
-    ``engine="arrow"`` hashes gram byte-ranges straight off the Arrow
-    string buffer (no gram strings, no array churn — the r6 kernel);
-    ``engine="catalyst"`` is the equivalent expression form (the
-    executable spec; parity-tested). Values are identical."""
-    if engine == "arrow":
-        from pyspark.sql import types as T
-        from pyspark.sql.pandas.types import to_arrow_schema
+    An Arrow kernel hashes gram byte-ranges straight off the string
+    buffer (no gram strings, no array churn). Its values equal the
+    expression form, ``explode_outer`` of ``F.xxhash64`` over
+    ``_distinct_grams``, which is the spec in
+    ``tests/test_dedup_fuzzy.py``."""
+    out_schema = T.StructType([
+        docs.schema[id_col],
+        T.StructField("__n", T.LongType()),
+        T.StructField("__g", T.LongType()),
+    ])
+    arrow_schema = to_arrow_schema(out_schema)
 
-        out_schema = T.StructType([
-            docs.schema[id_col],
-            T.StructField("__n", T.LongType()),
-            T.StructField("__g", T.LongType()),
-        ])
-        arrow_schema = to_arrow_schema(out_schema)
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
 
-        def kernel(batches):
-            import numpy as np
-            import pyarrow as pa
+        for rb in batches:
+            m = rb.num_rows
+            if not m:
+                continue
+            dh, dseg, kd = _distinct_gram_hashes(rb.column(1), n)
+            empty = np.flatnonzero(kd == 0)
+            idx = np.concatenate([dseg, empty])
+            g_vals = np.concatenate(
+                [dh, np.zeros(len(empty), np.int64)]
+            )
+            g_mask = np.concatenate(
+                [np.zeros(len(dh), bool), np.ones(len(empty), bool)]
+            )
+            ids = rb.column(0)
+            if isinstance(ids, pa.ChunkedArray):
+                ids = ids.combine_chunks()
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(idx)),
+                    pa.array(kd[idx], pa.int64()),
+                    pa.array(g_vals, pa.int64(), mask=g_mask),
+                ],
+                schema=arrow_schema,
+            )
 
-            for rb in batches:
-                m = rb.num_rows
-                if not m:
-                    continue
-                dh, dseg, kd = _distinct_gram_hashes(rb.column(1), n)
-                empty = np.flatnonzero(kd == 0)
-                idx = np.concatenate([dseg, empty])
-                g_vals = np.concatenate(
-                    [dh, np.zeros(len(empty), np.int64)]
-                )
-                g_mask = np.concatenate(
-                    [np.zeros(len(dh), bool), np.ones(len(empty), bool)]
-                )
-                ids = rb.column(0)
-                if isinstance(ids, pa.ChunkedArray):
-                    ids = ids.combine_chunks()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(idx)),
-                        pa.array(kd[idx], pa.int64()),
-                        pa.array(g_vals, pa.int64(), mask=g_mask),
-                    ],
-                    schema=arrow_schema,
-                )
-
-        return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
-
-    grams = F.transform(
-        _distinct_grams(text_col, n), lambda g: F.xxhash64(g)
-    )
-    return docs.select(
-        F.col(id_col),
-        F.size(grams).cast("bigint").alias("__n"),
-        F.explode_outer(grams).alias("__g"),
-    )
+    return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
 
 
 def _xxh64_long(x, seed):
@@ -584,7 +569,6 @@ def minhash_signatures(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of
     xxhash64(shingle, seed=i).
@@ -593,74 +577,27 @@ def minhash_signatures(
     lives inside its own row, so no explode and no groupBy: zero
     shuffle, embarrassingly parallel over the scan (the exploded+grouped
     form shuffled |docs|·|shingles| rows for nothing). Documents with
-    fewer than n words produce no signature row, matching the exploded
-    form.
+    fewer than n words produce no signature row (two empty docs must
+    NOT collide into a bucket).
 
-    ``engine="arrow"`` (default) runs the num_hashes-seed min walk as
-    one vectorized numpy kernel per Arrow batch over the Catalyst-hashed
-    gram longs — measured 8× the Catalyst higher-order-function form at
-    1M docs (43.5 s -> ~5 s), bit-identical values (the kernel
-    reproduces XXH64.hashLong exactly; parity-tested). The gram
-    construction and STRING hashing stay in Catalyst either way, so the
-    shingle definition has one owner. ``engine="catalyst"`` keeps the
-    pure-expression form (the executable spec the parity test compares
-    against).
+    Each gram STRING is hashed once and the num_hashes-member family is
+    derived by re-hashing that 64-bit id with each seed (hashing a hash
+    is a standard MinHash family construction; datasketch does the same
+    with a linear family). ``_minhash_sig_kernel`` runs the whole walk
+    as one vectorized numpy pass per Arrow batch, gram hashes taken off
+    the string buffer — measured 8× the Catalyst higher-order-function
+    form at 1M docs (43.5 s -> ~5 s). Values are bit-identical to that
+    expression form (``array_min`` of ``xxhash64(xxhash64(gram), i)``
+    over ``_distinct_grams``), the spec in ``tests/test_dedup_fuzzy.py``.
 
     Returns (doc_id, sig array<bigint>).
     """
-    if engine == "arrow":
-        from pyspark.sql import types as T
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = T.StructType([
-            docs.schema[id_col],
-            T.StructField("sig", T.ArrayType(T.LongType())),
-        ])
-        kernel = _minhash_sig_kernel(
-            num_hashes, n, to_arrow_schema(out_schema)
-        )
-        return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
-
-    words = F.split(F.col(text_col), " ")
-    k = F.size(words) - (n - 1)
-    grams = F.array_distinct(
-        F.when(
-            k > 0,
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
-    # docs with no shingles have no signature row (parity with the
-    # exploded form — and two empty docs must NOT collide into a bucket)
-    pre = docs.select(F.col(id_col), grams.alias("__grams")).where(
-        F.size("__grams") > 0
-    )
-    # Hash each gram STRING once, then derive the num_hashes-member
-    # family by re-hashing the fixed 8-byte bigint with each seed: the
-    # naive form ran xxhash64 over the full string num_hashes times per
-    # gram (~5× the hash bytes for 3-gram text). Hashing a hash is a
-    # standard MinHash family construction (datasketch does the same
-    # with a linear family); the banding curve is unchanged. __hs is
-    # materialized in its OWN projection — same CSE caveat as simhash:
-    # inlined, Catalyst would recompute the string hashes inside every
-    # min-walk (CollapseProject keeps non-cheap many-referenced
-    # expressions apart).
-    hs = pre.select(
-        id_col,
-        F.transform("__grams", lambda g: F.xxhash64(g)).alias("__hs"),
-    )
-
-    def min_hash(i: int):
-        # NB: the seed must be closed over OUTSIDE the lambda — a
-        # two-parameter lambda (e.g. ``lambda g, i=i``) makes pyspark
-        # pass the ARRAY INDEX as the second argument, silently
-        # shadowing the seed
-        seed = F.lit(i)
-        return F.array_min(F.transform("__hs", lambda h: F.xxhash64(h, seed)))
-
-    return hs.select(id_col, F.array(*[min_hash(i) for i in range(num_hashes)]).alias("sig"))
+    out_schema = T.StructType([
+        docs.schema[id_col],
+        T.StructField("sig", T.ArrayType(T.LongType())),
+    ])
+    kernel = _minhash_sig_kernel(num_hashes, n, to_arrow_schema(out_schema))
+    return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
 
 
 def _cap_telemetry(

@@ -1,25 +1,22 @@
-"""The vectorized parse stage: grok/regex field extraction from raw log
-lines (the Spark analog of a Grove connector's response parsing).
+"""The parse stage: grok/regex field extraction from raw log lines (the
+Spark analog of a Grove connector's response parsing).
 
-Two interchangeable engines, tested for equality:
+One production form, all Catalyst (Java regex, whole-stage codegen, no
+Python): an anchored pattern parses in ONE ``regexp_replace`` plus a
+split per row (``_parse_array``); any other pattern, and any row the
+single pass cannot handle exactly, takes one ``regexp_extract`` per
+named group (``parse_catalyst``). The pattern and the row pick the
+form, never the caller; ``parse_catalyst`` is also the spec the
+single-pass form is tested against (``tests/test_parse_fast.py``).
 
-* ``catalyst`` — ``regexp_extract`` column expressions: JVM-side,
-  whole-stage-codegen'd, the fast default.
-* ``arrow`` — a pandas UDF doing the same extraction with one vectorized
-  ``Series.str.extract`` per Arrow batch (per BASELINE's north_star:
-  connectors become "vectorized parse stages expressed as pandas/Arrow
-  UDFs"). No per-row Python either way.
-
-Custom grok patterns compile to either engine; named groups become
+Custom grok patterns expand to named-group regexes; named groups become
 struct fields.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Dict
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,8 +49,16 @@ def grok_to_regex(pattern: str) -> str:
     return re.sub(r"%\{(\w+):(\w+)\}", sub, pattern)
 
 
-def _group_names(pattern: str) -> list[str]:
-    return list(re.compile(pattern).groupindex.keys())
+def _named_groups(pattern: str) -> tuple[str, dict[str, int]]:
+    """(the pattern with ``(?P<name>`` rewritten to a plain ``(`` — Java
+    regex has no ``P`` syntax — and ``{name: group number}``).
+
+    Spark addresses groups by NUMBER; ``groupindex`` carries each named
+    group's true number, which stays correct even when the pattern mixes
+    in unnamed capturing groups (order-of-appearance numbering silently
+    extracted the wrong fields for those)."""
+    groupindex = dict(re.compile(pattern).groupindex)
+    return re.sub(r"\(\?P<\w+>", "(", pattern), groupindex
 
 
 def parse_catalyst(raw: Column, pattern: str = DEFAULT_PATTERN) -> Column:
@@ -62,17 +67,10 @@ def parse_catalyst(raw: Column, pattern: str = DEFAULT_PATTERN) -> Column:
     Catalyst caches the compiled Pattern per task; N extracts over the
     same line stay in one codegen stage.
     """
-    # regexp_extract addresses groups by NUMBER; groupindex carries each
-    # named group's true number, which stays correct even when the
-    # pattern mixes in unnamed capturing groups (order-of-appearance
-    # numbering silently extracted the wrong fields for those).
-    groupindex = re.compile(pattern).groupindex
-    plain = re.sub(r"\(\?P<\w+>", "(", pattern)
-    fields = [
-        F.regexp_extract(raw, plain, num).alias(name)
-        for name, num in groupindex.items()
-    ]
-    return F.struct(*fields)
+    plain, groups = _named_groups(pattern)
+    return F.struct(
+        *[F.regexp_extract(raw, plain, num).alias(name) for name, num in groups.items()]
+    )
 
 
 # Sentinels for the single-pass extract below. Rows whose raw line
@@ -122,35 +120,25 @@ def _single_pass_eligible(pattern: str) -> bool:
     return True
 
 
-def _parse_array(raw: Column, pattern: str, rep: Column | None = None) -> Column | None:
-    """One regex pass per row instead of one per field.
+def _parse_array(raw: Column, pattern: str, rep: Column) -> Column:
+    """One regex pass per row instead of one per field, for a pattern
+    that is ``_single_pass_eligible``.
 
-    ``regexp_replace`` of the anchored pattern with
-    ``\\x02$g1\\x01$g2...`` emits every capture group in a single match:
-    a replaced line starts with the ``\\x02`` hit sentinel and splits
-    into exactly k fields (Java's appendReplacement substitutes the
-    empty string for a group that did not participate — the same value
-    ``regexp_extract`` yields for it); an untouched line means no match,
-    which is all-empty fields, ``regexp_extract``'s miss value. Lines
-    that already contain a sentinel byte, end in a line terminator (see
-    ``_LINE_TERMINATORS``) or are NULL take the exact per-group
-    fallback, so results are identical for arbitrary input.
-    Returns None when the pattern is not single-pass eligible
-    (see ``_single_pass_eligible``).
-
-    ``rep`` optionally supplies the already-computed replace column
-    (``_parse_replace``) so a caller can hoist the regex into its own
-    projection; the CASE here references it twice (hit test + split),
-    and inlined it would run the regex twice per row.
+    ``rep`` is ``_parse_replace``'s column: ``regexp_replace`` of the
+    anchored pattern with ``\\x02$g1\\x01$g2...`` emits every capture
+    group in a single match. A replaced line starts with the ``\\x02``
+    hit sentinel and splits into exactly k fields (Java's
+    appendReplacement substitutes the empty string for a group that did
+    not participate — the same value ``regexp_extract`` yields for it);
+    an untouched line means no match, which is all-empty fields,
+    ``regexp_extract``'s miss value. Lines that already contain a
+    sentinel byte, end in a line terminator (see ``_LINE_TERMINATORS``)
+    or are NULL take the exact per-group fallback, so results are
+    identical for arbitrary input. The CASE references ``rep`` twice
+    (hit test + split), so the caller hoists it into its own projection;
+    inlined, the regex would run twice per row.
     """
-    groupindex = re.compile(pattern).groupindex
-    if not groupindex or not _single_pass_eligible(pattern):
-        return None
-    plain = re.sub(r"\(\?P<\w+>", "(", pattern)
-    nums = list(groupindex.values())
-    if rep is None:
-        rep = _parse_replace(raw, pattern)
-    k = len(nums)
+    plain, groups = _named_groups(pattern)
     ends_in_terminator = F.lit(False)
     for t in _LINE_TERMINATORS:
         ends_in_terminator = ends_in_terminator | raw.endswith(t)
@@ -160,83 +148,58 @@ def _parse_array(raw: Column, pattern: str, rep: Column | None = None) -> Column
             | raw.contains(_SEP)
             | raw.contains(_HIT)
             | ends_in_terminator,
-            F.array(*[F.regexp_extract(raw, plain, n) for n in nums]),
+            F.array(*[F.regexp_extract(raw, plain, n) for n in groups.values()]),
         )
         .when(
             rep.startswith(_HIT),
             F.split(F.substring(rep, 2, 2147483647), _SEP, -1),
         )
-        .otherwise(F.array(*[F.lit("")] * k))
+        .otherwise(F.array(*[F.lit("")] * len(groups)))
     )
 
 
 def _parse_replace(raw: Column, pattern: str) -> Column:
     """The single regex pass: every group emitted in one replace."""
-    groupindex = re.compile(pattern).groupindex
-    plain = re.sub(r"\(\?P<\w+>", "(", pattern)
-    repl = _HIT + _SEP.join(f"${n}" for n in groupindex.values())
+    plain, groups = _named_groups(pattern)
+    repl = _HIT + _SEP.join(f"${n}" for n in groups.values())
     return F.regexp_replace(raw, plain, repl)
-
-
-def parse_arrow(raw: Column, pattern: str = DEFAULT_PATTERN) -> Column:
-    """Same extraction as an Arrow-vectorized pandas UDF (one
-    ``Series.str.extract`` per batch — no per-row Python)."""
-    names = _group_names(pattern)
-    out_t = T.StructType([T.StructField(n, T.StringType()) for n in names])
-
-    @F.pandas_udf(out_t)
-    def extract(s: pd.Series) -> pd.DataFrame:
-        # select the NAMED columns: str.extract also emits positional
-        # columns for unnamed capturing groups, which the struct lacks
-        df = s.str.extract(pattern)[names]
-        return df.fillna("")  # regexp_extract yields '' on miss; keep parity
-
-    return extract(raw)
 
 
 def parse_stage(
     df: DataFrame,
     raw_col: str = "raw",
     pattern: str = DEFAULT_PATTERN,
-    engine: str = "catalyst",
     out_col: str = "parsed",
 ) -> DataFrame:
     if "%{" in pattern:
         pattern = grok_to_regex(pattern)
-    if engine == "catalyst":
-        if _parse_array(F.col(raw_col), pattern) is not None:
-            # Replace and group-array each live in their OWN projection:
-            # both are non-cheap and referenced more than once
-            # downstream, so CollapseProject keeps the projects apart
-            # and the regex runs ONCE per row (inlined, the CASE's hit
-            # test + split branch would re-run the replace, and each
-            # field the array — the same CSE rule the minhash __hs
-            # projection relies on). Measured on the 2M-row pipeline
-            # leg: 2.43 s -> 1.67 s wall (five anchored matches/row
-            # down to one match + one split).
-            tmp_rep, tmp_arr = "__parse_rep", "__parse_arr"
-            while tmp_rep in df.columns:
-                tmp_rep += "_"
-            while tmp_arr in df.columns:
-                tmp_arr += "_"
-            names = list(re.compile(pattern).groupindex.keys())
-            parsed = F.struct(
-                *[
-                    F.element_at(F.col(tmp_arr), i + 1).alias(n)
-                    for i, n in enumerate(names)
-                ]
-            )
-            return (
-                df.withColumn(tmp_rep, _parse_replace(F.col(raw_col), pattern))
-                .withColumn(
-                    tmp_arr,
-                    _parse_array(F.col(raw_col), pattern, rep=F.col(tmp_rep)),
-                )
-                .withColumn(out_col, parsed)
-                .drop(tmp_rep, tmp_arr)
-            )
+    names = list(_named_groups(pattern)[1])
+    if not names or not _single_pass_eligible(pattern):
         return df.withColumn(out_col, parse_catalyst(F.col(raw_col), pattern))
-    return df.withColumn(out_col, parse_arrow(F.col(raw_col), pattern))
+    # Replace and group-array each live in their OWN projection: both
+    # are non-cheap and referenced more than once downstream, so
+    # CollapseProject keeps the projects apart and the regex runs ONCE
+    # per row (inlined, the CASE's hit test + split branch would re-run
+    # the replace, and each field the array — the same CSE rule the
+    # minhash __hs projection relies on). Measured on the 2M-row
+    # pipeline leg: 2.43 s -> 1.67 s wall (five anchored matches/row
+    # down to one match + one split).
+    tmp_rep, tmp_arr = "__parse_rep", "__parse_arr"
+    while tmp_rep in df.columns:
+        tmp_rep += "_"
+    while tmp_arr in df.columns:
+        tmp_arr += "_"
+    parsed = F.struct(
+        *[F.element_at(F.col(tmp_arr), i + 1).alias(n) for i, n in enumerate(names)]
+    )
+    return (
+        df.withColumn(tmp_rep, _parse_replace(F.col(raw_col), pattern))
+        .withColumn(
+            tmp_arr, _parse_array(F.col(raw_col), pattern, F.col(tmp_rep))
+        )
+        .withColumn(out_col, parsed)
+        .drop(tmp_rep, tmp_arr)
+    )
 
 
 def parse_stage_multi(
@@ -259,15 +222,12 @@ def parse_stage_multi(
     }
     all_fields: list[str] = []
     for p in compiled.values():
-        for n in _group_names(p):
+        for n in _named_groups(p)[1]:
             if n not in all_fields:
                 all_fields.append(n)
 
     def struct_for(p: str) -> Column:
-        # groupindex gives the true group number per name (unnamed
-        # capturing groups shift positional numbering — see parse_catalyst)
-        groupindex = re.compile(p).groupindex
-        plain = re.sub(r"\(\?P<\w+>", "(", p)
+        plain, groupindex = _named_groups(p)
         cols = []
         for n in all_fields:
             if n in groupindex:

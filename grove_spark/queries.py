@@ -28,31 +28,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread_partitions(
-    spark: SparkSession, path: str, per_part: int = 1 << 16
-) -> int:
+def _spread_partitions(df: DataFrame, per_part: int = 1 << 16) -> int:
     """Scale-adaptive repartition width: one partition per ``per_part``
     input bytes (default 64 KB — compressed text expands ~4x, and the
     downstream per-byte kernels keep a task busy at that size), clamped
     to [2, defaultParallelism]. Replaces constant-width spreads that
     cost 32 tiny tasks per stage at gate scale but starve a big input
     (guide §2: derive partitioning from input size, not a constant
-    tuned to one box)."""
-    import os as _os
-
-    if _os.path.isdir(path):
-        size = sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _, fs in _os.walk(path)
-            for f in fs
-        )
-    else:
-        try:
-            size = _os.path.getsize(path)
-        except OSError:
-            size = 0
-    want = max(2, size // per_part)
-    return int(min(spark.sparkContext.defaultParallelism, want))
+    tuned to one box). The size is the optimizer's estimate for ``df``
+    (a file scan's is its files' total bytes, read through the Hadoop
+    FileSystem, so it holds on any store)."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    want = max(2, int(str(stats.sizeInBytes())) // per_part)
+    return int(min(df.sparkSession.sparkContext.defaultParallelism, want))
 
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -800,10 +788,10 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers (signatures + verify sets) instead of re-scanning and
     # re-shuffling per subtree; blocks are freed when the frame is GC'd
     # (a persist here would leak past return — see minhash_dedup_pairs)
+    docs = _t(spark, sf_dir, "documents")
     docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(_spread_partitions(spark, f"{sf_dir}/documents.parquet"))
+        docs.select("doc_id", "text")
+        .repartition(_spread_partitions(docs))
         .localCheckpoint(eager=False)
     )
     return minhash_dedup_pairs(
@@ -1648,8 +1636,8 @@ GROUP BY event_type
 def q_grok_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The vectorized parse pillar with an oracle: synthesize a log line
     per event (identical arithmetic both engines), run the grok pattern
-    through the production parse stage (plans/parse.py, catalyst engine
-    — regexp_extract inside codegen), emit the extracted fields."""
+    through the production parse stage (plans/parse.py — the single-pass
+    regexp_replace inside codegen), emit the extracted fields."""
     from grove_spark.plans.parse import grok_to_regex, parse_stage
 
     ev = _t(spark, sf_dir, "events")
@@ -1794,10 +1782,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 10 != 0)
     bench = docs.where(F.col("doc_id") % 10 == 0)
-    # catalyst engine: the sf-dir corpus is thousands of docs — the Arrow
-    # gram kernel's fixed stage setup costs more than it saves below
-    # ~100k docs (measured; same values either way, parity-tested)
-    s = contamination_scores(corpus, bench, n=13, engine="catalyst")
+    s = contamination_scores(corpus, bench, n=13)
     return s.select(
         "doc_id", "n_grams", "n_contaminated", "contaminated_frac",
         (F.col("n_contaminated") >= 1).alias("is_contaminated"),

@@ -64,7 +64,7 @@ def build_stream(
         df = df.withColumn("__h", entry_hash(ENTRY_HASH_COLS))
         df = df.dropDuplicatesWithinWatermark(["__h"]).drop("__h")
     if "raw" in df.columns:
-        df = parse_stage(df, "raw", pattern, engine="catalyst")
+        df = parse_stage(df, "raw", pattern)
     df = enrich(df, sources_dim, on="source")
     return route(df, sinks_dim, connector_col="connector", raw_col="tokens")
 

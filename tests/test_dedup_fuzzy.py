@@ -6,7 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from grove_spark.operators.dedup_fuzzy import (
+    _distinct_grams,
     embedding_near_pairs,
+    hashed_gram_rows,
+    hashed_shingle_sets,
     lsh_candidate_pairs,
     minhash_dedup_pairs,
     minhash_signatures,
@@ -30,6 +33,95 @@ SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("text", T.StringType()),
 ])
+
+
+# ---- expression specs of the Arrow gram kernels ---------------------------
+# The package keeps one form per operator: the kernels. These Catalyst
+# expression forms over the shared shingle definition (_distinct_grams)
+# are what each kernel must equal, value for value.
+
+
+def _spec_gram_hashes(text_col: str, n: int):
+    return F.transform(_distinct_grams(text_col, n), lambda g: F.xxhash64(g))
+
+
+def spec_hashed_shingle_sets(docs, n, id_col="doc_id", text_col="text"):
+    """hashed_shingle_sets: (doc, sh_set) in first-occurrence order."""
+    return docs.select(
+        F.col(id_col).alias("doc"), _spec_gram_hashes(text_col, n).alias("sh_set")
+    )
+
+
+def spec_hashed_gram_rows(docs, n, id_col="doc_id", text_col="text"):
+    """hashed_gram_rows: one (id, __n, __g) row per distinct gram id,
+    explode_outer so a gramless doc keeps one null-gram row."""
+    grams = _spec_gram_hashes(text_col, n)
+    return docs.select(
+        F.col(id_col),
+        F.size(grams).cast("bigint").alias("__n"),
+        F.explode_outer(grams).alias("__g"),
+    )
+
+
+def spec_minhash_signatures(docs, num_hashes, n, id_col="doc_id", text_col="text"):
+    """minhash_signatures: sig[i] = min over grams of
+    xxhash64(xxhash64(gram), i); docs with no grams have no row."""
+    pre = docs.select(
+        F.col(id_col), _distinct_grams(text_col, n).alias("__grams")
+    ).where(F.size("__grams") > 0)
+    # __hs in its own projection, or Catalyst re-hashes the strings in
+    # every seed's min walk
+    hs = pre.select(
+        id_col, F.transform("__grams", lambda g: F.xxhash64(g)).alias("__hs")
+    )
+
+    def min_hash(i: int):
+        # the seed is closed over OUTSIDE the lambda: a two-parameter
+        # lambda would receive the array index as its second argument
+        seed = F.lit(i)
+        return F.array_min(F.transform("__hs", lambda h: F.xxhash64(h, seed)))
+
+    return hs.select(
+        id_col, F.array(*[min_hash(i) for i in range(num_hashes)]).alias("sig")
+    )
+
+
+# Inputs the kernels' byte-range walk must split exactly like Spark's
+# split(text, ' '): empty words from leading/trailing/doubled spaces,
+# tabs and newlines INSIDE words (only ' ' separates), multi-byte UTF-8,
+# and words/grams of 32+ bytes (XXH64's stripe path).
+ADVERSARIAL_TEXTS = [
+    "",
+    " ",
+    "   ",
+    " leading space then five words",
+    "trailing space after five words ",
+    "  both  ends  and  doubled  spaces  ",
+    "héllo wörld ünïcode ñandú 日本語 テキスト 🙂 emoji mixed in",
+    "tab\tinside word and new\nline inside word plus\r\ncrlf end",
+    "\ttab leads and a newline trails\n",
+    "x" * 40,
+    "supercalifragilisticexpialidocious " * 4,
+    "日本語のテキストは一語で三十二バイトを超える",
+    " ".join(f"ünï{i}\twörd" for i in range(20)),
+    "a b c d e f g h i j k l m n o p",
+]
+
+
+def _parity_corpus(spark, seed_mul, n_rows, max_words, vocab, nulls=False):
+    """Random word docs plus ADVERSARIAL_TEXTS, as (doc_id, text)."""
+    import random
+
+    rows = []
+    for i in range(n_rows):
+        rng = random.Random(i * seed_mul)
+        k = rng.randint(0, max_words)
+        t = " ".join(f"w{rng.randint(0, vocab)}" for _ in range(k))
+        if nulls and i % 17 == 0:
+            t = t + "  doubled  spaces "
+        rows.append((i, None if nulls and i % 23 == 11 else t))
+    rows += [(n_rows + j, t) for j, t in enumerate(ADVERSARIAL_TEXTS)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 @pytest.fixture(scope="module")
@@ -275,27 +367,18 @@ def test_xxh64_long_kernel_matches_spark(spark):
 
 
 def test_arrow_minhash_parity_with_catalyst(spark):
-    """engine='arrow' signatures are bit-identical to the Catalyst
-    executable spec, including short-doc drop semantics."""
-    import random
-
-    rows = []
-    for i in range(400):
-        rng = random.Random(i)
-        k = rng.randint(0, 12)  # includes docs with < n words (dropped)
-        rows.append((i, " ".join(f"w{rng.randint(0, 60)}" for _ in range(k))))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"]: r["sig"]
-         for r in minhash_signatures(df, 64, 3, engine="arrow").collect()}
-    c = {r["doc_id"]: r["sig"]
-         for r in minhash_signatures(df, 64, 3, engine="catalyst").collect()}
-    assert a == c
-    assert len(a) > 100  # the corpus really produced signatures
-    a32 = {r["doc_id"]: r["sig"]
-           for r in minhash_signatures(df, 32, 3, engine="arrow").collect()}
-    c32 = {r["doc_id"]: r["sig"]
-           for r in minhash_signatures(df, 32, 3, engine="catalyst").collect()}
-    assert a32 == c32
+    """The Arrow signature kernel is bit-identical to the Catalyst
+    expression spec at 64 and 32 hashes, including short-doc drop
+    semantics and the adversarial texts."""
+    df = _parity_corpus(spark, 1, 400, 12, 60)
+    for num_hashes in (64, 32):
+        a = {r["doc_id"]: r["sig"]
+             for r in minhash_signatures(df, num_hashes, 3).collect()}
+        c = {r["doc_id"]: r["sig"]
+             for r in spec_minhash_signatures(df, num_hashes, 3).collect()}
+        assert a == c, f"num_hashes={num_hashes}"
+        assert len(a) > 100  # the corpus really produced signatures
+        assert {400 + 10, 400 + 12} <= a.keys()  # 32+-byte grams
 
 
 def test_xxh64_bytes_kernel_matches_spark(spark):
@@ -328,52 +411,32 @@ def test_xxh64_bytes_kernel_matches_spark(spark):
 
 
 def test_hashed_gram_rows_parity(spark):
-    """Arrow gram-row kernel vs the Catalyst expression form: identical
+    """Arrow gram-row kernel vs the Catalyst expression spec: identical
     (id, __n, __g) multisets, including null texts, short docs, doubled
-    spaces and n=1/n=13."""
-    import random
-
-    from grove_spark.operators.dedup_fuzzy import hashed_gram_rows
-
-    rows = []
-    for i in range(300):
-        rng = random.Random(i * 31)
-        k = rng.randint(0, 16)
-        words = [f"w{rng.randint(0, 40)}" for _ in range(k)]
-        t = " ".join(words)
-        if i % 17 == 0:
-            t = t + "  doubled  spaces "
-        rows.append((i, None if i % 23 == 11 else t))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    spaces, the adversarial texts and n=1/n=3/n=13."""
+    df = _parity_corpus(spark, 31, 300, 16, 40, nulls=True)
+    n_docs = 300 + len(ADVERSARIAL_TEXTS)
     for n in (1, 3, 13):
         a = sorted(
             (r["doc_id"], r["__n"], r["__g"])
-            for r in hashed_gram_rows(df, n, engine="arrow").collect()
+            for r in hashed_gram_rows(df, n).collect()
         )
         c = sorted(
             (r["doc_id"], r["__n"], r["__g"])
-            for r in hashed_gram_rows(df, n, engine="catalyst").collect()
+            for r in spec_hashed_gram_rows(df, n).collect()
         )
         assert a == c, f"n={n}"
-        assert len({r[0] for r in a}) == 300  # every doc represented
+        assert len({r[0] for r in a}) == n_docs  # every doc represented
 
 
 def test_hashed_shingle_sets_parity(spark):
     """Arrow shingle-set kernel vs the Catalyst spec: same per-doc hash
-    SETS (order differs by design: sorted vs first-occurrence)."""
-    import random
-
-    from grove_spark.operators.dedup_fuzzy import hashed_shingle_sets
-
-    rows = []
-    for i in range(300):
-        rng = random.Random(i * 13)
-        k = rng.randint(0, 10)
-        rows.append((i, " ".join(f"w{rng.randint(0, 9)}" for _ in range(k))))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    SETS (order differs by design: sorted vs first-occurrence),
+    adversarial texts included."""
+    df = _parity_corpus(spark, 13, 300, 10, 9)
     a = {r["doc"]: frozenset(r["sh_set"])
-         for r in hashed_shingle_sets(df, 3, engine="arrow").collect()}
+         for r in hashed_shingle_sets(df, 3).collect()}
     c = {r["doc"]: frozenset(r["sh_set"])
-         for r in hashed_shingle_sets(df, 3, engine="catalyst").collect()}
+         for r in spec_hashed_shingle_sets(df, 3).collect()}
     assert a == c
-    assert len(a) == 300  # short docs kept with empty sets
+    assert len(a) == 300 + len(ADVERSARIAL_TEXTS)  # short docs kept, empty sets

@@ -7,7 +7,6 @@ import pytest
 
 from grove_spark.plans.parse import (
     DEFAULT_PATTERN,
-    _parse_array,
     _single_pass_eligible,
     parse_catalyst,
     parse_stage,
@@ -98,7 +97,7 @@ def test_empty_match_pattern(spark):
     ],
 )
 def test_ineligible_patterns_fall_back(spark, pat):
-    assert _parse_array(F.col("raw"), pat) is None
+    assert not _single_pass_eligible(pat)
     _check(spark, ["abc", "x", "a\nb", "p$", None], pat)
 
 

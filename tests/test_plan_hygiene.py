@@ -1,8 +1,9 @@
 """Plan hygiene — the 100 TB survival checks (SURVEY §7 hard part (e)).
 
 These assert properties of the *physical plan*, not results:
-* no row-at-a-time Python (``BatchEvalPython``) anywhere; Arrow-vectorized
-  UDFs (``ArrowEvalPython``) only in the opt-in arrow parse stage;
+* no row-at-a-time Python (``BatchEvalPython``) anywhere; Arrow kernels
+  only where an operator's one production form is a kernel;
+* one production form per operator: no caller-selected ``engine``;
 * watermark predicates reach the parquet scan (PushedFilters);
 * dim joins broadcast (no SortMergeJoin for sources/sinks);
 * the processor chain stays inside whole-stage codegen;
@@ -13,7 +14,6 @@ import pytest
 
 from grove_spark.fixtures.generator import write_fixture
 from grove_spark.plans.pipeline import build_pipeline
-from grove_spark.plans.parse import parse_stage
 
 
 @pytest.fixture(scope="module")
@@ -38,14 +38,7 @@ def test_no_per_row_python_in_pipeline(spark, loaded):
     res = build_pipeline(seq, sources, sinks, n_partitions=4)
     plan = plan_of(res.routed)
     assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan  # catalyst parse has no Python at all
-
-
-def test_arrow_parse_is_vectorized_not_row(spark, loaded):
-    seq, _, _ = loaded
-    plan = plan_of(parse_stage(seq, engine="arrow"))
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan  # the parse stage has no Python at all
 
 
 def _pushed_filters(plan: str) -> str:
@@ -173,10 +166,11 @@ def test_every_gate_query_is_python_free(spark):
                      # BPE encode: iterative merge walk, Arrow-batched
                      # with per-executor piece memo (decode IS Catalyst)
                      "bpe_tokenize",
-                     # r6: gram hashing + the MinHash seed family run as
-                     # vectorized xxh64 Arrow kernels (bit-identical to
-                     # the Catalyst spec — test_dedup_fuzzy parity
-                     # suite); measured 8x+ on the 1M-doc legs
+                     # gram hashing + the MinHash seed family: the
+                     # vectorized xxh64 Arrow kernels are these
+                     # operators' only form (bit-identical to the
+                     # expression specs in test_dedup_fuzzy.py; 8x+ on
+                     # the 1M-doc legs)
                      "minhash_lsh", "decontaminate"}
     for name, fn in QUERIES.items():
         if name == "stream_tumbling":
@@ -356,6 +350,38 @@ def test_resume_protocol_has_one_implementation():
     assert pruning == []
     for rel in ("config.py", "plans/pipeline.py"):
         assert "entry_hash" not in (pkg / rel).read_text(), rel
+
+
+def test_one_form_per_operator():
+    """Each operator has ONE production form; an alternative form lives
+    under tests/ as its spec, never behind a caller's ``engine`` switch.
+    The parse stage is Java regex end to end (a pandas UDF would parse
+    with Python ``re`` semantics)."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import grove_spark
+    import grove_spark.plans.parse as parse
+
+    def public(ns, owner):
+        for name, obj in vars(ns).items():
+            if name.startswith("_"):
+                continue
+            if inspect.isfunction(obj) and obj.__module__ == owner:
+                yield name, obj
+            elif inspect.isclass(obj) and obj.__module__ == owner:
+                for mname, meth in public(obj, owner):
+                    yield f"{name}.{mname}", meth
+
+    switched = []
+    for info in pkgutil.walk_packages(grove_spark.__path__, "grove_spark."):
+        mod = importlib.import_module(info.name)
+        for name, fn in public(mod, mod.__name__):
+            if "engine" in inspect.signature(fn).parameters:
+                switched.append(f"{info.name}.{name}")
+    assert switched == []
+    assert "pandas_udf" not in inspect.getsource(parse)
 
 
 def test_resumed_run_and_registry_frames_are_local(spark, tmp_path):

@@ -240,17 +240,23 @@ def test_shared_source_identities_with_diverged_state(spark, tmp_path):
 def test_parse_with_unnamed_capturing_group(spark):
     """An unnamed capturing group in a user pattern must not shift the
     named groups' numbering (positional mapping extracted wrong fields).
-    Catalyst, arrow and the multi-pattern CASE must all agree."""
-    from grove_spark.plans.parse import parse_stage, parse_stage_multi
+    The single-pass parse, the per-group spec and the multi-pattern CASE
+    must all agree."""
+    from pyspark.sql import functions as F
+
+    from grove_spark.plans.parse import parse_catalyst, parse_stage, parse_stage_multi
 
     pat = r"^(\d+)-(?P<level>\w+):(?P<msg>\w+)$"
     df = spark.createDataFrame(
         [("1-warn:disk", "s1")], "raw string, source string"
     )
-    for engine in ("catalyst", "arrow"):
-        row = parse_stage(df, "raw", pat, engine=engine).select("parsed").first()
-        assert row["parsed"]["level"] == "warn", engine
-        assert row["parsed"]["msg"] == "disk", engine
+    for form, parsed in (
+        ("single-pass", parse_stage(df, "raw", pat)),
+        ("per-group", df.withColumn("parsed", parse_catalyst(F.col("raw"), pat))),
+    ):
+        row = parsed.select("parsed").first()
+        assert row["parsed"]["level"] == "warn", form
+        assert row["parsed"]["msg"] == "disk", form
     row = parse_stage_multi(df, {"s1": pat}).select("parsed").first()
     assert row["parsed"]["level"] == "warn"
     assert row["parsed"]["msg"] == "disk"

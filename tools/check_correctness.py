@@ -3,7 +3,8 @@
 Runs every __spark_entry__.queries() entry on Spark AND its oracle_sql()
 twin on DuckDB at the given sf dir; compares row count, column names,
 and an order-insensitive value hash (values canonicalized: floats
-rounded to 9 significant digits, rows sorted).
+rounded to 9 significant digits, rows sorted). Each verdict line ends
+with the query's Spark wall time (plan build + collect), ``spark_s``.
 
 Usage: python tools/check_correctness.py [sf_dir]
 """
@@ -14,6 +15,7 @@ import hashlib
 import math
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -68,6 +70,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str = ""):
         qs = {k: v for k, v in qs.items() if k in keep}
     failures = []
     for name, fn in qs.items():
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
@@ -76,8 +79,9 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str = ""):
             failures.append((name, f"spark error: {e}"))
             print(f"FAIL {name}: spark error: {str(e)[:200]}")
             continue
+        spark_s = f"spark_s={time.perf_counter() - t0:.2f}"
         if name not in oracle:
-            print(f"SKIP {name}: no oracle (rows={len(srows)})")
+            print(f"SKIP {name}: no oracle (rows={len(srows)}) {spark_s}")
             continue
         try:
             res = con.execute(oracle[name])
@@ -102,9 +106,9 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str = ""):
             problems.append(f"spark-only={only_s} oracle-only={only_o}")
         if problems:
             failures.append((name, "; ".join(problems)))
-            print(f"FAIL {name}: {'; '.join(problems)[:400]}")
+            print(f"FAIL {name}: {'; '.join(problems)[:400]} {spark_s}")
         else:
-            print(f"OK   {name}: rows={len(srows)}")
+            print(f"OK   {name}: rows={len(srows)} {spark_s}")
     print(f"\n{len(qs) - len(failures)}/{len(qs)} queries match")
     return 1 if failures else 0
 
