@@ -37,6 +37,7 @@ from typing import Any, Callable, Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from grove_spark.plans.pipeline import Member, commit_keyed
 from grove_spark.session import in_list, local_frame
 from grove_spark.state.runstate import RunState, reference
 
@@ -901,7 +902,13 @@ def run_fleet(
     whole history, and mixed pointer columns share no bound, so either
     reads unpruned. The pruning decision, ``{files_kept, files_total}``,
     is the report's ``scan`` (None when unpruned) and is committed in
-    each due member's ``metrics["scan"]``, as run_incremental does."""
+    each due member's ``metrics["scan"]``, as run_incremental does.
+
+    It writes through ``operators/sinks.write_run`` (footer stats on the
+    shared pointer column, the default one for a mixed fleet) and
+    commits through ``plans/pipeline.commit_keyed``, as run_incremental
+    does: members that wrote rows commit ``file_stats``, and
+    ``per_key[ref]["new_pointer"]`` is the pointer committed."""
     from grove_spark.sources.scans import incremental_scan
 
     now = time.time() if now is None else now
@@ -951,7 +958,7 @@ def run_fleet(
     # deduped FIRST: persist() captures a frame's plan with the cache
     # entries registered at that moment, so routed persisted second reads
     # deduped's in-memory relation instead of re-deriving the stream. The
-    # stats action materialises both; the write reads routed's cache and
+    # counts action materialises both; the write reads routed's cache and
     # the boundary-hash job reads deduped's — ONE source scan per tick.
     # Persisted the other way round, routed's cache would re-derive the
     # deduped stream from the fact table and the boundary job would scan
@@ -959,102 +966,42 @@ def run_fleet(
     deduped.persist()
     routed.persist()
 
-    run_id = state.new_run_id()
-    data_paths = []
     # State keys are (connector, identity, operation) — cfg.reference().
     # Grouping on connector alone would cross-contaminate multi-identity
     # fleets of the same connector: one identity's max pointer would be
     # committed as the other's watermark (silent data loss). The identity
-    # and operation columns ride the member-dim join, so every
-    # aggregate below groups on the full key. Max pointer is computed on
-    # the NATIVE column type, stringified only at the manifest boundary —
-    # max(cast-to-string) mis-orders numeric sequence pointers.
+    # and operation columns ride the member-dim join, so the counts and
+    # the commit tail's boundary hashes group on the full key.
     key_cols = ["connector", "identity", "operation"]
-    # one aggregation PER DISTINCT POINTER COLUMN (usually one): a mixed
-    # fleet cannot take max over a single shared column without casting
-    # to string, which mis-orders numeric pointers
-
-    def keys_for(pc):
-        return [
-            "\x01".join([c.connector, c.identity, c.operation])
-            for c in due if pc_of[c.reference()] == pc
-        ]
-
-    distinct_pcs = sorted(pcs)
-    stats = []
-    for pc in distinct_pcs:
-        sub = routed if len(distinct_pcs) == 1 else routed.where(
-            in_list(MEMBER_KEY, keys_for(pc))
-        )
-        stats += (
-            sub.groupBy(*key_cols, "descriptor")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("n_tok").alias("sum_n_tok"),
-                F.max(F.col(pc)).alias("new_pointer"),
-            )
-            .collect()
-        )
-    if out_path and stats:
-        from grove_spark.operators.sinks import write_partitioned_parquet
-
-        run_dir = f"{out_path}/part-{run_id}"
-        state.register_pending(run_dir)  # orphan GC must not race the write
-        write_partitioned_parquet(routed, run_dir)
-        data_paths.append(run_dir)
-
-    def row_key(r):
-        return reference(r["connector"], r["identity"], r["operation"])
-
-    per_key: Dict[str, dict] = {}
-    for r in stats:
-        d = per_key.setdefault(row_key(r), {"per_sink": {}, "new_pointer": None})
-        d["per_sink"][r["descriptor"]] = {"rows": r["rows"], "sum_n_tok": r["sum_n_tok"]}
-        # native-type comparison across this key's descriptors
-        if d["new_pointer"] is None or (
-            r["new_pointer"] is not None and r["new_pointer"] > d["new_pointer"]
-        ):
-            d["new_pointer"] = r["new_pointer"]
-
-    # per-key boundary seen-hashes: rows AT each key's max pointer,
-    # hashed like the next run's anti-join input. One small job over the
-    # persisted pruned batch per pointer column.
-    from grove_spark.operators.dedup import (
-        ENTRY_HASH_COLS,
-        advance_seen,
-        boundary_hashes,
+    counts_rows = (
+        routed.groupBy(*key_cols, "descriptor")
+        .agg(F.count(F.lit(1)).alias("rows"), F.sum("n_tok").alias("sum_n_tok"))
+        .collect()
     )
+    run_id = state.new_run_id()
+    data_paths, file_stats = [], None
+    if out_path and counts_rows:
+        from grove_spark.operators.sinks import write_partitioned_parquet, write_run
 
-    brows: Dict[str, list] = {}
-    for pc in distinct_pcs if stats else []:
-        sub = deduped if len(distinct_pcs) == 1 else deduped.where(
-            in_list(MEMBER_KEY, keys_for(pc))
-        )
-        for r in boundary_hashes(sub, ENTRY_HASH_COLS, pc, key_cols).collect():
-            brows.setdefault(row_key(r), []).append(r)
-
-    updates = []
-    for cfg in due:
-        ref = cfg.reference()
-        got = per_key.get(ref)
-        # the boundary rows' own (Spark-cast) pointer string, so
-        # watermark and seen keys stringify identically
-        ptr, seen = advance_seen(brows.get(ref), watermarks.get(ref), seen_states.get(ref))
-        updates.append(
-            {
-                "key": ref,
-                "pointer": ptr,
-                "seen": seen,
-                "metrics": {
-                    "per_sink": (got or {}).get("per_sink", {}),
-                    **({"scan": scan} if scan is not None else {}),
-                },
-                "data_paths": data_paths if got else [],
-            }
+        data_paths, file_stats = write_run(
+            state, f"{out_path}/part-{run_id}",
+            lambda d: write_partitioned_parquet(routed, d), scan_pc,
         )
     # ONE atomic manifest replace for the whole fleet tick; conditional on
     # the version observed before planning (optimistic concurrency).
-    state.commit_many(updates, run_id, now=now, expected_version=base_version)
+    per_key = commit_keyed(
+        state, run_id, counts_rows, deduped,
+        [
+            Member(
+                ref, (c.connector, c.identity, c.operation), pc_of[ref],
+                watermarks[ref], seen_states[ref],
+            )
+            for c in due for ref in [c.reference()]
+        ],
+        key_cols=key_cols, data_paths=data_paths, file_stats=file_stats,
+        extras={"scan": scan} if scan is not None else None,
+        now=now, expected_version=base_version,
+    )
     routed.unpersist()
     deduped.unpersist()
     # report keyed by connector name for single-identity fleets (back-

@@ -65,8 +65,8 @@ def compact_runs(
     intra-day min/max under ``maxRecordsPerFile`` splits, since a
     sorted task stream cuts into consecutive sub-day ranges. One extra
     shuffle, paid once at rewrite."""
-    from grove_spark.operators.sinks import write_partitioned_parquet
-    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
+    from grove_spark.operators.sinks import write_partitioned_parquet, write_run
+    from grove_spark.sources.file_stats import _list_parquet
 
     base_version = state.version()
     candidates = []
@@ -113,13 +113,14 @@ def compact_runs(
 
     run_id = state.new_run_id()
     new_dir = os.path.normpath(f"{out_path}/part-compact-{run_id}")
-    state.register_pending(new_dir)  # orphan GC must not race the write
-    write_partitioned_parquet(
-        df, new_dir, max_records_per_file=max_records_per_file,
-        sort_within=sort_within,
+    data_paths, out_stats = write_run(
+        state, new_dir,
+        lambda d: write_partitioned_parquet(
+            df, d, max_records_per_file=max_records_per_file,
+            sort_within=sort_within,
+        ),
+        pointer_col,
     )
-    out_files = _list_parquet(new_dir)
-    out_stats = parquet_file_stats(out_files, pointer_col)
 
     # bloom coverage never silently decays through a rewrite: any key
     # column that had a sidecar on a replaced dir gets one on the
@@ -144,12 +145,12 @@ def compact_runs(
             "compaction": {
                 "dirs_replaced": len(candidates),
                 "files_before": files_before,
-                "files_after": len(out_files),
+                "files_after": len(out_stats),
                 "bytes_before": bytes_before,
-                "bytes_after": sum(os.path.getsize(f) for f in out_files),
+                "bytes_after": sum(os.path.getsize(f) for f in out_stats),
             }
         },
-        data_paths=[new_dir],
+        data_paths=data_paths,
         file_stats=out_stats,
         replaces=sorted(candidates),
         rewrite_kind="compaction",  # data-neutral: incremental readers skip it
@@ -160,5 +161,5 @@ def compact_runs(
         "new_dir": new_dir,
         "replaced": sorted(candidates),
         "files_before": files_before,
-        "files_after": len(out_files),
+        "files_after": len(out_stats),
     }

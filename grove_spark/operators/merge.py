@@ -186,8 +186,7 @@ def _merge_run(
     max_records_per_file, run_id, bloom_fpr,
     bloom_probe_max_keys, stats_cache,
 ) -> Optional[dict]:
-    from grove_spark.operators.sinks import write_partitioned_parquet
-    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
+    from grove_spark.operators.sinks import write_partitioned_parquet, write_run
 
     base_version = state.version()
     root = os.path.normpath(out_path)
@@ -385,8 +384,6 @@ def _merge_run(
         new_df = preserved
 
     run_id = run_id or state.new_run_id()
-    new_dir = os.path.normpath(f"{out_path}/part-merge-{run_id}")
-    state.register_pending(new_dir)  # orphan GC must not race the write
     # REBALANCE before the dynamic-partition write (guide §6): new_df is
     # a union of per-dir scan splits plus the (often many-partitioned)
     # update frame — written directly, every tiny task opens its own
@@ -394,32 +391,24 @@ def _merge_run(
     # 250k-row rewrite, ~100 near-empty files). The AQE rebalance
     # shuffle sizes write tasks to advisoryPartitionSizeInBytes, so the
     # rewritten dir comes out in few well-sized files. Row content is
-    # untouched; only file layout changes.
-    write_partitioned_parquet(
-        new_df.hint("rebalance"), new_dir,
-        max_records_per_file=max_records_per_file,
+    # untouched; only file layout changes. A purge that empties every
+    # affected dir publishes the removal with NO data path (write_run
+    # drops the parquet-less dir).
+    data_paths, out_stats = write_run(
+        state, os.path.normpath(f"{out_path}/part-merge-{run_id}"),
+        lambda d: write_partitioned_parquet(
+            new_df.hint("rebalance"), d,
+            max_records_per_file=max_records_per_file,
+        ),
+        pointer_col,
     )
-    out_files = _list_parquet(new_dir)
-    out_stats = parquet_file_stats(out_files, pointer_col)
     rows_after = sum(e["rows"] for e in out_stats.values())
-
-    if not out_files:
-        # a purge emptied every affected dir: publish the removal with
-        # NO data path — committing a parquet-less dir would poison
-        # every later basePath read (UNABLE_TO_INFER_SCHEMA) in merges
-        # and manifest scans
-        import shutil
-
-        shutil.rmtree(new_dir, ignore_errors=True)
-        state._clear_pending([new_dir])
-        data_paths, new_dir = [], None
-    else:
-        data_paths = [new_dir]
+    new_dir = data_paths[0] if data_paths else None
 
     # bloom coverage never silently decays: rebuild the sidecar when
     # asked, or when any replaced dir carried one
     bloom_built = None
-    if out_files:
+    if new_dir:
         from grove_spark.sources.bloom import build_key_bloom, load_bloom
 
         want = bloom_fpr is not None or any(

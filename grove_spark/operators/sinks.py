@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import sys
 import time
-from typing import Callable, Optional
+from typing import Callable, Dict, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,6 +62,30 @@ def write_partitioned_parquet(
         .partitionBy("descriptor", "connector", "date")
         .parquet(path)
     )
+
+
+def write_run(
+    state, run_dir: str, write: Callable[[str], None], pointer_col: str
+) -> Tuple[list, Dict[str, dict]]:
+    """The only code that writes a run dir: register it pending (the
+    orphan GC must not race the write), ``write(run_dir)``, then read
+    the footer stats of the files written, tagged with ``pointer_col``,
+    for the commit (manifest_scan prunes on them). A write that left no
+    parquet file is removed and unregistered: a committed parquet-less
+    dir breaks every later basePath read. Returns ``(data_paths,
+    file_stats)``, ``([], {})`` for such a write."""
+    import shutil
+
+    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
+
+    state.register_pending(run_dir)
+    write(run_dir)
+    files = _list_parquet(run_dir)
+    if not files:
+        shutil.rmtree(run_dir, ignore_errors=True)
+        state._clear_pending([run_dir])
+        return [], {}
+    return [run_dir], parquet_file_stats(files, pointer_col)
 
 
 def write_gzip_ndjson(df: DataFrame, path: str, mode: str = "overwrite") -> None:

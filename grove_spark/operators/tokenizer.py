@@ -439,7 +439,7 @@ def run_tokenize_ingest(
 
     from pyspark.sql import functions as F
 
-    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
+    from grove_spark.operators.sinks import write_run
     from grove_spark.sources.scans import incremental_scan
     from grove_spark.state.runstate import reference
 
@@ -492,11 +492,10 @@ def run_tokenize_ingest(
         rows, new_ptr = int(agg["rows"]), agg["ptr"]
         data_paths, out_stats = [], None
         if rows:
-            run_dir = f"{out_path}/part-{run_id}"
-            state.register_pending(run_dir)
-            seq.write.parquet(run_dir)
-            data_paths.append(run_dir)
-            out_stats = parquet_file_stats(_list_parquet(run_dir), pointer_col)
+            data_paths, out_stats = write_run(
+                state, f"{out_path}/part-{run_id}", seq.write.parquet,
+                pointer_col,
+            )
         metrics = {"rows": rows}
         if prune_metrics is not None:
             metrics["scan"] = prune_metrics

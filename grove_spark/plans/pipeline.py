@@ -8,9 +8,15 @@ and row-at-a-time processors becomes ONE declarative DataFrame plan:
     -> seen-hash anti-join at the resume boundary (operators/dedup)
     -> parse of the raw line in Catalyst (plans/parse.parse_stage)
     -> broadcast enrich with the sources dim (connector/pointer_path/...)
-    -> optional processor chain (raw vs processed dual stream)
     -> broadcast routing join to sinks dim (fan-out, salted repartition)
     -> partitioned write per descriptor + per-sink aggregate counts
+
+Commit protocol (shared with config.run_fleet): ``operators/sinks.
+write_run`` writes the run dir and reads its footer stats, and
+``commit_keyed`` commits boundary hashes, pointers, metrics, data paths
+and file stats per member in ONE commit_many — so fleet outputs carry
+``file_stats`` too, and a fleet report's ``new_pointer`` is the
+pointer the tick committed.
 
 Scale notes (the 100 TB plan): the only wide operation is the final
 groupBy on (descriptor) — low cardinality, partial-agg'd map-side. Both
@@ -23,8 +29,9 @@ from __future__ import annotations
 
 import os
 import time
+from collections import namedtuple
 from dataclasses import dataclass
-from typing import Optional
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -37,7 +44,7 @@ from grove_spark.operators.dedup import (
 )
 from grove_spark.operators.enrich import enrich
 from grove_spark.operators.routing import route, salted_repartition, sink_counts
-from grove_spark.operators.sinks import write_partitioned_parquet
+from grove_spark.operators.sinks import write_partitioned_parquet, write_run
 from grove_spark.plans.metadata import grove_metadata
 from grove_spark.plans.parse import DEFAULT_PATTERN, parse_stage
 from grove_spark.session import local_frame
@@ -65,12 +72,10 @@ def build_pipeline(
     watermark: str | None = None,
     pointer_col: str = "event_time",
     n_partitions: int = 32,
-    n_salt: int = 8,
     with_metadata: bool = True,
     observe: bool = True,
     seen_state: DataFrame | None = None,
     repartition: bool = True,
-    processed_chain: list | None = None,
 ) -> PipelineResult:
     """Assemble the full plan lazily; nothing executes here."""
     df = sequences
@@ -101,26 +106,7 @@ def build_pipeline(
             pointer=F.col(pointer_col).cast("string"),
             collection_time=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         )
-    if processed_chain:
-        # raw-vs-processed dual stream (OutputStream.raw/processed,
-        # grove/models.py:62-70): descriptors subscribed to "processed"
-        # receive the chain's output — which may change cardinality
-        # (split_path) — so the fan-out is a union of two routing joins
-        # over one shared (persisted upstream by the caller) scan.
-        from grove_spark.operators.processors import apply_chain
-
-        raw_routed = route(
-            df, sinks_dim.where(F.col("stream") != "processed"),
-            connector_col="connector", raw_col="tokens",
-        )
-        processed_df = apply_chain(df, processed_chain)
-        proc_routed = route(
-            processed_df, sinks_dim.where(F.col("stream") == "processed"),
-            connector_col="connector", raw_col="tokens",
-        )
-        routed = raw_routed.unionByName(proc_routed, allowMissingColumns=True)
-    else:
-        routed = route(df, sinks_dim, connector_col="connector", raw_col="tokens")
+    routed = route(df, sinks_dim, connector_col="connector", raw_col="tokens")
     # Lean output projection BEFORE the routing shuffle: the sink schema
     # is (doc_id, routed_tokens, n_tok, source, connector, identity,
     # descriptor, sink_kind, event_time, parsed?, _grove?). Dropping the
@@ -158,8 +144,76 @@ def build_pipeline(
     # shuffle; the salted repartition exists solely for the fan-out WRITE
     counts = sink_counts(routed)
     if repartition:
-        routed = salted_repartition(routed, n_partitions, n_salt=n_salt)
+        routed = salted_repartition(routed, n_partitions)
     return PipelineResult(routed=routed, counts=counts, observed=obs, deduped=deduped)  # type: ignore[arg-type]
+
+
+# one state key a run commits: its values of the run's key columns
+# (``()`` without key columns), pointer column, watermark and seen hashes
+Member = namedtuple("Member", "key values pointer_col watermark seen")
+
+
+def commit_keyed(
+    state: RunState, run_id: str, counts_rows: list, deduped: DataFrame,
+    members: Sequence[Member], key_cols: Sequence[str] = (),
+    data_paths: Sequence[str] = (), file_stats: Optional[dict] = None,
+    extras: Optional[dict] = None, now: Optional[float] = None,
+    expected_version: Optional[int] = None,
+) -> Dict[str, dict]:
+    """The commit half of the resume protocol: run_incremental is its
+    one-member case without key columns, run_fleet has one member per
+    due connector keyed on (connector, identity, operation).
+
+    ``counts_rows`` are the collected (*key_cols, descriptor, rows,
+    sum_n_tok) counts; ``deduped`` is the stream the next run hashes.
+    Per member, advance_seen folds its boundary_hashes rows (one job per
+    distinct pointer column, none when nothing was counted) into the
+    pointer and seen hashes; metrics are its per-sink counts plus
+    ``extras``. ONE conditional commit_many publishes every member, and
+    only members that wrote rows get ``data_paths`` and ``file_stats``.
+    Returns {key: {per_sink, new_pointer}} for those members, where
+    ``new_pointer`` is the pointer committed."""
+    # looked up at call time, like the sink writer: a patched module
+    # attribute (perfbench's spans) must see the boundary-hash jobs
+    from grove_spark.operators.dedup import boundary_hashes
+
+    key_cols = list(key_cols)
+
+    def values_of(r):
+        return tuple(r[k] for k in key_cols)
+
+    per_sink: Dict[tuple, dict] = {}
+    for r in counts_rows:
+        per_sink.setdefault(values_of(r), {})[r["descriptor"]] = {
+            "rows": r["rows"], "sum_n_tok": r["sum_n_tok"],
+        }
+    # boundary state for the NEXT run: hashes of the rows AT each key's
+    # max pointer (native-type max — see boundary_hashes), one small job
+    # over the persisted batch per pointer column; the pointer string is
+    # Spark's own cast, so the next run's string round-trip is
+    # self-consistent. boundary_hashes works per key, so a member keeps
+    # the rows of its own pointer column's job only
+    brows: Dict[tuple, list] = {}
+    for pc in sorted({m.pointer_col for m in members}) if counts_rows else []:
+        want = {m.values for m in members if m.pointer_col == pc}
+        for r in boundary_hashes(deduped, ENTRY_HASH_COLS, pc, key_cols).collect():
+            if values_of(r) in want:
+                brows.setdefault(values_of(r), []).append(r)
+
+    updates, report = [], {}
+    for m in members:
+        ptr, seen = advance_seen(brows.get(m.values), m.watermark, m.seen)
+        sinks = per_sink.get(m.values)
+        updates.append({
+            "key": m.key, "pointer": ptr, "seen": seen,
+            "metrics": {"per_sink": sinks or {}, **(extras or {})},
+            "data_paths": list(data_paths) if sinks else [],
+            "file_stats": file_stats if sinks else None,
+        })
+        if sinks:
+            report[m.key] = {"per_sink": sinks, "new_pointer": ptr}
+    state.commit_many(updates, run_id, now=now, expected_version=expected_version)
+    return report
 
 
 def run_incremental(
@@ -225,50 +279,28 @@ def run_incremental(
     # parse/enrich/route projections; the source is scanned ONCE.
     result.deduped.persist()
     counts_rows = result.counts.collect()  # tiny: one row per descriptor
-    data_paths = []
+    data_paths, file_stats = [], None
     # skip empty collections entirely, like the reference does for empty
     # streams (grove/connectors/__init__.py:358-366) — a 0-row dynamic
     # partition write would publish a schemaless, unreadable directory
-    out_stats = None
     if out_path and counts_rows:
-        run_dir = f"{out_path}/part-{run_id}"
-        state.register_pending(run_dir)  # orphan GC must not race the write
-        write_partitioned_parquet(result.routed, run_dir)
-        data_paths.append(run_dir)
-        # writer-side stats collection: one footer read per file just
-        # written, recorded IN the commit — downstream manifest_scan
-        # consumers prune these outputs without re-opening footers
-        from grove_spark.sources.file_stats import (
-            _list_parquet,
-            parquet_file_stats,
+        data_paths, file_stats = write_run(
+            state, f"{out_path}/part-{run_id}",
+            lambda d: write_partitioned_parquet(result.routed, d), pointer_col,
         )
-
-        out_stats = parquet_file_stats(_list_parquet(run_dir), pointer_col)
-    # boundary state for the NEXT run: hashes of rows AT the new max
-    # pointer (native-type max — see boundary_hashes). One small job over
-    # the predicate-pruned batch; the pointer string is Spark's own cast,
-    # so the next run's string round-trip is self-consistent.
-    from grove_spark.operators.dedup import boundary_hashes
-
-    brows = (
-        boundary_hashes(result.deduped, ENTRY_HASH_COLS, pointer_col).collect()
-        if counts_rows else []
-    )
-    new_ptr, new_seen = advance_seen(brows, watermark, seen)
-    metrics = {
-        "per_sink": {r["descriptor"]: {"rows": r["rows"], "sum_n_tok": r["sum_n_tok"]} for r in counts_rows},
-    }
+    extras = {}
     if prune_metrics is not None:
-        metrics["scan"] = prune_metrics
+        extras["scan"] = prune_metrics
     if result.observed is not None and counts_rows:
-        # Observation.get asserts on a 0-row observed plan; an empty run
-        # has nothing to observe anyway
-        metrics["observed"] = {k: v for k, v in result.observed.get.items()}
-
-    state.commit(
-        key, run_id,
-        pointer=new_ptr, seen=new_seen, metrics=metrics, data_paths=data_paths,
-        expected_version=base_version, file_stats=out_stats,
+        # the Observation fired on counts.collect(); Observation.get
+        # asserts on a 0-row observed plan, and an empty run has nothing
+        # to observe anyway
+        extras["observed"] = dict(result.observed.get)
+    commit_keyed(
+        state, run_id, counts_rows, result.deduped,
+        [Member(key, (), pointer_col, watermark, seen)],
+        data_paths=data_paths, file_stats=file_stats, extras=extras,
+        expected_version=base_version,
     )
     result.deduped.unpersist()
     result.run_id = run_id

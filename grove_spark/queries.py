@@ -43,6 +43,31 @@ def _spread_partitions(df: DataFrame, per_part: int = 1 << 16) -> int:
     return int(min(df.sparkSession.sparkContext.defaultParallelism, want))
 
 
+def _gate_store(state, out: str, batches) -> list:
+    """Commit each batch as its own run dir under ``out``, the way a
+    pipeline run does (operators/sinks.write_run, then one commit with
+    the event_time footer stats); returns the manifest version after
+    each commit."""
+    import os
+
+    from grove_spark.operators.sinks import write_partitioned_parquet, write_run
+
+    versions = []
+    for i, batch in enumerate(batches):
+        run_id = state.new_run_id()
+        data_paths, file_stats = write_run(
+            state, os.path.join(out, f"part-{run_id}"),
+            lambda d, b=batch: write_partitioned_parquet(b.repartition(2), d),
+            "event_time",
+        )
+        state.commit(
+            "gate", run_id, pointer=f"batch{i}", data_paths=data_paths,
+            file_stats=file_stats,
+        )
+        versions.append(state.version())
+    return versions
+
+
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 
@@ -2737,8 +2762,6 @@ def q_storage_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from grove_spark.operators.compaction import compact_runs
-    from grove_spark.operators.sinks import write_partitioned_parquet
-    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
     from grove_spark.sources.scans import manifest_scan
     from grove_spark.state.runstate import RunState
 
@@ -2751,18 +2774,10 @@ def q_storage_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", F.col("ts").alias("event_time"),
         F.lit("logs").alias("descriptor"), F.lit("gate").alias("connector"),
     )
-    for i, batch in enumerate([
+    _gate_store(state, os.path.join(base, "out"), [
         ev.where(F.col("event_time") < F.lit("2024-01-08")),
         ev.where(F.col("event_time") >= F.lit("2024-01-08")),
-    ]):
-        run_id = state.new_run_id()
-        d = os.path.join(base, "out", f"part-{run_id}")
-        state.register_pending(d)
-        write_partitioned_parquet(batch.repartition(2), d)
-        state.commit(
-            "gate", run_id, pointer=f"batch{i}", data_paths=[d],
-            file_stats=parquet_file_stats(_list_parquet(d), "event_time"),
-        )
+    ])
     res = compact_runs(
         spark, state, os.path.join(base, "out"),
         pointer_col="event_time", small_file_bytes=1 << 30,
@@ -3075,8 +3090,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from grove_spark.operators.merge import merge_into
-    from grove_spark.operators.sinks import write_partitioned_parquet
-    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
     from grove_spark.sources.scans import manifest_scan
     from grove_spark.state.runstate import RunState
 
@@ -3092,18 +3105,10 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("logs").alias("descriptor"), F.lit("gate").alias("connector"),
     )
     # disjoint key ranges: [0, 500) and [500, max] — the pruning prey
-    for i, batch in enumerate([
+    _gate_store(state, out, [
         ev.where(F.col("event_id") < 500),
         ev.where(F.col("event_id") >= 500),
-    ]):
-        run_id = state.new_run_id()
-        d = os.path.join(out, f"part-{run_id}")
-        state.register_pending(d)
-        write_partitioned_parquet(batch.repartition(2), d)
-        state.commit(
-            "gate", run_id, pointer=f"batch{i}", data_paths=[d],
-            file_stats=parquet_file_stats(_list_parquet(d), "event_time"),
-        )
+    ])
 
     updates = (
         ev.where((F.col("event_id") % 7 == 0) & (F.col("event_id") >= 500))
@@ -3176,8 +3181,6 @@ def q_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from grove_spark.operators.sinks import write_partitioned_parquet
-    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
     from grove_spark.sources.scans import incremental_append_scan
     from grove_spark.state.runstate import RunState
 
@@ -3191,21 +3194,11 @@ def q_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", F.col("ts").alias("event_time"),
         F.lit("logs").alias("descriptor"), F.lit("gate").alias("connector"),
     )
-    ckpt = None
-    for i, batch in enumerate([
+    # the consumer's checkpoint integer: the version after batch 0
+    ckpt = _gate_store(state, out, [
         ev.where(F.col("event_id") < 500),
         ev.where(F.col("event_id") >= 500),
-    ]):
-        run_id = state.new_run_id()
-        d = os.path.join(out, f"part-{run_id}")
-        state.register_pending(d)
-        write_partitioned_parquet(batch.repartition(2), d)
-        state.commit(
-            "gate", run_id, pointer=f"batch{i}", data_paths=[d],
-            file_stats=parquet_file_stats(_list_parquet(d), "event_time"),
-        )
-        if i == 0:
-            ckpt = state.version()  # the consumer's checkpoint integer
+    ])[0]
 
     inc = incremental_append_scan(spark, state, since_version=ckpt)
     info = inc._grove_incremental
@@ -3296,8 +3289,6 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from grove_spark.operators.sinks import write_partitioned_parquet
-    from grove_spark.sources.file_stats import _list_parquet, parquet_file_stats
     from grove_spark.sources.manifest_stream import read_manifest_stream
     from grove_spark.state.runstate import RunState
 
@@ -3311,19 +3302,11 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", F.col("ts").alias("event_time"),
         F.lit("logs").alias("descriptor"), F.lit("gate").alias("connector"),
     )
-    for i, batch in enumerate([
+    _gate_store(state, out, [
         ev.where(F.col("event_id") < 300),
         ev.where((F.col("event_id") >= 300) & (F.col("event_id") < 700)),
         ev.where(F.col("event_id") >= 700),
-    ]):
-        run_id = state.new_run_id()
-        d = os.path.join(out, f"part-{run_id}")
-        state.register_pending(d)
-        write_partitioned_parquet(batch.repartition(2), d)
-        state.commit(
-            "gate", run_id, pointer=f"batch{i}", data_paths=[d],
-            file_stats=parquet_file_stats(_list_parquet(d), "event_time"),
-        )
+    ])
 
     name = "stream_manifest_gate"
     try:  # rerun-safe: the memory sink registers a temp view per run

@@ -77,9 +77,11 @@ def _ser(v, kind: str):
 
 
 def parquet_file_stats(files: List[str], col: str) -> Dict[str, dict]:
-    """Per-file {min, max, kind, rows} for ``col`` from parquet FOOTERS
-    (pyarrow metadata — no data pages are read). A file whose footer
-    lacks statistics for the column maps to {min: None, max: None}: the
+    """Per-file {min, max, kind, rows, col} for ``col`` from parquet
+    FOOTERS (pyarrow metadata — no data pages are read). ``col`` tags
+    the column the range describes: a reader pruning on another column
+    must treat the entry as stat-less. A file whose footer lacks
+    statistics for the column maps to {min: None, max: None}: the
     pruner must keep it."""
     import pyarrow.parquet as pq
 
@@ -110,6 +112,7 @@ def parquet_file_stats(files: List[str], col: str) -> Dict[str, dict]:
             "max": _ser(hi, kind),
             "kind": kind,
             "rows": md.num_rows,
+            "col": col,
         }
     return out
 

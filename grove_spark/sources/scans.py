@@ -288,8 +288,9 @@ def manifest_scan(
     an Iceberg snapshot. With a ``watermark``, files whose recorded
     pointer max is behind it are dropped from the listing WITHOUT
     opening any footer: the stats were collected by the writer at commit
-    time. Files the manifest has no stats for (older manifests) are
-    kept conservatively. The row-level predicate is applied regardless —
+    time. Files the manifest has no stats for on ``pointer_col`` (stats
+    of another column, untagged stats of older manifests) are kept
+    conservatively. The row-level predicate is applied regardless —
     pruning changes cost, never results."""
     from grove_spark.sources.file_stats import _list_parquet, prune_files
 
@@ -297,8 +298,12 @@ def manifest_scan(
     all_files = [f for p in paths for f in _list_parquet(p)]
     if pointer_col and watermark is not None and all_files:
         stats = state.committed_file_stats(as_of=as_of)
+        # an entry describes the column it was collected for: one for
+        # another column, or untagged (older manifests), is stat-less
         merged = {
-            f: stats.get(f, {"min": None, "max": None}) for f in all_files
+            f: stats[f] if stats.get(f, {}).get("col") == pointer_col
+            else {"min": None, "max": None}
+            for f in all_files
         }
         kept, total = prune_files(
             "", pointer_col, watermark, inclusive=inclusive, stats=merged

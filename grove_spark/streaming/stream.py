@@ -81,9 +81,10 @@ def windowed_sink_counts(routed: DataFrame, window: str = "1 minute") -> DataFra
 
 def manifest_sink(state, out_path: str, key: str = "stream.default"):
     """foreachBatch sink with EXACTLY-ONCE manifest commits: each
-    micro-batch writes its own ``part-<key>-b<epoch>`` directory and
-    publishes {data path, new pointer, per-sink counts} in one atomic
-    RunState commit (T1 — the streaming twin of run_incremental's
+    micro-batch writes its own ``part-<key>-b<epoch>`` directory
+    (operators/sinks.write_run) and publishes {data path, its event_time
+    footer stats, new pointer, per-sink counts} in one atomic RunState
+    commit (T1 — the streaming twin of run_incremental's
     protocol).
 
     Replay-safe two ways: Spark re-runs a failed batch under the SAME
@@ -93,7 +94,7 @@ def manifest_sink(state, out_path: str, key: str = "stream.default"):
     at-least-once execution, exactly-once effect."""
     from pyspark.sql import functions as F  # noqa: F811 (executor pickle)
 
-    from grove_spark.operators.sinks import write_partitioned_parquet
+    from grove_spark.operators.sinks import write_partitioned_parquet, write_run
 
     def submit(df: DataFrame, epoch_id: int) -> None:
         run_id = f"{key}-b{epoch_id}"
@@ -107,9 +108,10 @@ def manifest_sink(state, out_path: str, key: str = "stream.default"):
         ).collect()
         if not counts:
             return  # empty batch: nothing to publish
-        run_dir = f"{out_path}/part-{run_id}"
-        state.register_pending(run_dir)  # orphan GC must not race the write
-        write_partitioned_parquet(df, run_dir)
+        data_paths, file_stats = write_run(
+            state, f"{out_path}/part-{run_id}",
+            lambda d: write_partitioned_parquet(df, d), "event_time",
+        )
         ptrs = [r["ptr"] for r in counts if r["ptr"] is not None]
         state.commit(
             key, run_id,
@@ -117,7 +119,7 @@ def manifest_sink(state, out_path: str, key: str = "stream.default"):
             # with pointer=None preserves it)
             pointer=str(max(ptrs)) if ptrs else None,
             metrics={"per_sink": {r["descriptor"]: {"rows": r["rows"]} for r in counts}},
-            data_paths=[run_dir],
+            data_paths=data_paths, file_stats=file_stats,
         )
 
     return submit

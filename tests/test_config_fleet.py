@@ -792,6 +792,49 @@ def test_run_fleet_mixed_pointer_columns_stay_unpruned(spark, tmp_path):
     assert set(_scan_metrics(state, r["run_id"]).values()) == {None}
 
 
+def _unpruned_rows(spark, state, pointer_col, watermark):
+    """The committed outputs read whole, then filtered past the watermark
+    (the reference a pruned manifest_scan must equal)."""
+    from pyspark.sql import functions as F
+
+    from grove_spark.operators.dedup import watermark_literal
+
+    df = None
+    for p in state.committed_paths():
+        d = spark.read.option("basePath", p).parquet(p)
+        df = d if df is None else df.unionByName(d, allowMissingColumns=True)
+    df = df.where(F.col(pointer_col) > watermark_literal(df, pointer_col, watermark))
+    return sorted(tuple(r) for r in df.select("doc_id", "identity", "descriptor").collect())
+
+
+def test_run_fleet_outputs_are_prunable(spark, tmp_path):
+    """A tick commits the footer stats of the files it wrote: a
+    manifest_scan at the first tick's pointer keeps only the second
+    tick's files and returns the same rows as the unpruned read."""
+    from grove_spark.sources.file_stats import _list_parquet
+    from grove_spark.sources.scans import manifest_scan
+
+    seq = _history(tmp_path)
+    cfgs = _fleet(
+        ("okta_system_log", "a", "okta", 0),
+        ("github_audit", "a", "github", 0),
+    )
+    state = RunState(str(tmp_path / "state"))
+    out = str(tmp_path / "out")
+    run_fleet(spark, cfgs, seq, state, out_path=out, now=1.0)
+    wm = max(state.pointer(c.reference()) for c in cfgs)
+    _append_batch(seq, 1)
+    r2 = run_fleet(spark, cfgs, seq, state, out_path=out, now=2.0)
+
+    ms = manifest_scan(spark, state, pointer_col="event_time", watermark=wm)
+    n_tick2 = len(_list_parquet(f"{out}/part-{r2['run_id']}"))
+    n_all = sum(len(_list_parquet(p)) for p in state.committed_paths())
+    assert ms._grove_prune == {"files_kept": n_tick2, "files_total": n_all}
+    assert 0 < n_tick2 < n_all
+    got = sorted(tuple(r) for r in ms.select("doc_id", "identity", "descriptor").collect())
+    assert got and got == _unpruned_rows(spark, state, "event_time", wm)
+
+
 def test_member_names_with_quotes_route(spark, fixture_dir):
     """Member keys reach the plan as quoted SQL literals (one parsed IN
     per list): identities holding quotes and backslashes still route

@@ -230,6 +230,46 @@ def test_resumed_run_reads_strict_subset_of_files(spark, tmp_path):
     assert ms_none.select("descriptor", "doc_id").count() == 0
 
 
+def test_manifest_scan_ignores_stats_of_another_column(spark, tmp_path):
+    """Committed file stats describe ONE column: a manifest_scan on a
+    different pointer column keeps those files (stat-less) and equals
+    the unpruned filtered read, while a scan on the stats' own column
+    still prunes."""
+    from grove_spark.operators.sinks import write_partitioned_parquet
+
+    state = RunState(str(tmp_path / "state"))
+    df = spark.range(0, 400).select(
+        F.col("id").alias("event_id"),
+        (F.lit("2024-05-01 00:00:00").cast("timestamp")
+         + F.make_interval(secs=F.col("id").cast("double"))).alias("event_time"),
+        F.lit("logs").alias("descriptor"), F.lit("c").alias("connector"),
+    )
+    for i, batch in enumerate([df.where("event_id < 200"), df.where("event_id >= 200")]):
+        run_id = state.new_run_id()
+        d = str(tmp_path / "out" / f"part-{run_id}")
+        state.register_pending(d)
+        write_partitioned_parquet(batch.coalesce(1), d)
+        state.commit(
+            "k", run_id, pointer=str(i), data_paths=[d],
+            file_stats=parquet_file_stats(_list_parquet(d), "event_id"),
+        )
+
+    wm = "2024-05-01 00:05:00"  # event_id 300
+    ms = manifest_scan(spark, state, pointer_col="event_time", watermark=wm)
+    assert ms._grove_prune == {"files_kept": 2, "files_total": 2}
+    full = None
+    for p in state.committed_paths():
+        d = spark.read.option("basePath", p).parquet(p)
+        full = d if full is None else full.unionByName(d)
+    want = sorted(r[0] for r in full.where(
+        F.col("event_time") > F.lit(wm).cast("timestamp")).select("event_id").collect())
+    assert want and sorted(r[0] for r in ms.select("event_id").collect()) == want
+
+    by_id = manifest_scan(spark, state, pointer_col="event_id", watermark="300")
+    assert by_id._grove_prune == {"files_kept": 1, "files_total": 2}
+    assert sorted(r[0] for r in by_id.select("event_id").collect()) == want
+
+
 def test_pruned_equals_full_across_boundary_watermarks(spark, ranged_parquet):
     """Result-equality sweep across watermarks sitting ON file
     boundaries, just inside, just outside, below-min and above-max —

@@ -1,5 +1,5 @@
-"""Dual-stream routing, failed-row telemetry, serialize golden bytes,
-salted-repartition skew balance."""
+"""Failed-row telemetry, serialize golden bytes, salted-repartition skew
+balance."""
 
 import gzip
 import json
@@ -23,23 +23,6 @@ def loaded(spark, tmp_path_factory):
         spark.read.parquet(p["sources"]),
         spark.read.parquet(p["sinks"]),
     )
-
-
-def test_processed_chain_dual_stream(spark, loaded):
-    """Descriptors on the processed stream receive the chain's output
-    (here: drop short sequences); raw descriptors see everything —
-    OutputStream.raw/processed semantics (grove/models.py:62-70)."""
-    seq, sources, sinks = loaded
-    chain = [{"processor": "filter_entries", "filters": ["sql:n_tok < 50"]}]
-    res = build_pipeline(seq, sources, sinks, n_partitions=4,
-                         processed_chain=chain, with_metadata=False)
-    counts = {r["descriptor"]: r["rows"] for r in res.counts.collect()}
-    n_total = seq.count()
-    n_kept = seq.where("NOT (n_tok < 50)").count()
-    assert counts["logs"] == n_total
-    assert counts["processed"] == n_kept < n_total
-    # archive subscribes to raw on a subset of connectors
-    assert 0 < counts["archive"] < n_total
 
 
 def test_failed_row_telemetry(spark, loaded):

@@ -352,6 +352,57 @@ def test_resume_protocol_has_one_implementation():
         assert "entry_hash" not in (pkg / rel).read_text(), rel
 
 
+def test_commit_protocol_has_one_implementation():
+    """The write-and-commit half of the resume protocol has one
+    implementation: operators/sinks.write_run is the only code that
+    registers (and so writes) a run dir, and plans/pipeline.commit_keyed
+    is the one keyed commit tail run_incremental and run_fleet call."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "grove_spark"
+
+    def callers(rel, name):
+        """Top-level functions (or classes) of ``rel`` calling ``name``."""
+        out = set()
+        for top in ast.parse((pkg / rel).read_text()).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call) and name == getattr(
+                    node.func, "attr", getattr(node.func, "id", None)
+                ):
+                    out.add(getattr(top, "name", "<module>"))
+        return out
+
+    registering = {
+        (str(p.relative_to(pkg)), f)
+        for p in pkg.rglob("*.py") if p.name != "runstate.py"
+        for f in callers(p.relative_to(pkg), "register_pending")
+    }
+    assert registering == {("operators/sinks.py", "write_run")}
+    for rel in ("config.py", "plans/pipeline.py"):
+        for name in ("boundary_hashes", "advance_seen", "commit_many"):
+            assert callers(rel, name) <= {"commit_keyed"}, (rel, name)
+
+
+def test_perfbench_spanned_names_resolve():
+    """Every (owner, attr) the benchmark's tracer wraps still exists: a
+    name that no longer resolves fails every traced op."""
+    import pathlib
+    import sys
+
+    root = str(pathlib.Path(__file__).parent.parent)
+    sys.path.insert(0, root)
+    try:
+        from perfbench import run
+    finally:
+        sys.path.remove(root)
+    missing = [
+        (owner, attr) for owner, attr, _span in run.SPANNED
+        if not callable(getattr(run._resolve(owner), attr, None))
+    ]
+    assert run.SPANNED and missing == []
+
+
 def test_one_form_per_operator():
     """Each operator has ONE production form; an alternative form lives
     under tests/ as its spec, never behind a caller's ``engine`` switch.

@@ -84,17 +84,13 @@ def test_crash_between_write_and_commit_is_exactly_once(spark, env, monkeypatch)
 
     # run 2 CRASHES after writing its part dir but before the manifest
     # commit (the reference's failure window, grove/connectors/
-    # __init__.py:443-445 — where IT would duplicate a page)
-    real_commit = RunState.commit
-
-    def boom(self, *a, **kw):
-        raise RuntimeError("crash before manifest publish")
-
-    monkeypatch.setattr(RunState, "commit", boom)
-    with pytest.raises(RuntimeError, match="crash before manifest"):
-        run_incremental(spark, paths["sequences"], sources, sinks, state,
-                        out_path=out, n_partitions=4)
-    monkeypatch.setattr(RunState, "commit", real_commit)
+    # __init__.py:443-445 — where IT would duplicate a page). Every
+    # commit goes through commit_many (commit delegates to it).
+    with monkeypatch.context() as m:
+        m.setattr(RunState, "commit_many", _crash)
+        with pytest.raises(RuntimeError, match="crash before manifest"):
+            run_incremental(spark, paths["sequences"], sources, sinks, state,
+                            out_path=out, n_partitions=4)
 
     # the orphan part dir exists on disk but is INVISIBLE to readers
     orphans = set(glob.glob(f"{out}/part-*")) - set(state.committed_paths())
@@ -112,6 +108,49 @@ def test_crash_between_write_and_commit_is_exactly_once(spark, env, monkeypatch)
     new_ids = {f"doc_r{i}" for i in range(6)}
     assert new_ids <= set(got), "rows from the failed window were lost"
     assert state.pointer(key) == "2024-06-01 00:00:05"  # latest log entry
+
+
+def _crash(self, *a, **kw):
+    raise RuntimeError("crash before manifest publish")
+
+
+def test_fleet_crash_between_write_and_commit_is_exactly_once(spark, env, monkeypatch):
+    """The same crash window for a fleet tick: the tick's part dir is an
+    invisible orphan, no member's pointer moves, and the next tick
+    writes every new row exactly once."""
+    from grove_spark.config import ConnectorConfig, run_fleet
+
+    paths, _sources, _sinks, state, out = env
+    seq = spark.read.parquet(paths["sequences"])
+    cfgs = [
+        ConnectorConfig(connector=f"{s}_audit", identity="a", source=s, frequency=0)
+        for s in sorted(r["source"] for r in seq.select("source").distinct().collect())
+    ]
+    run_fleet(spark, cfgs, paths["sequences"], state, out_path=out, now=1.0)
+    p1 = {c.reference(): state.pointer(c.reference()) for c in cfgs}
+    rows1 = sorted(r["doc_id"] for r in _committed_rows(spark, state))
+    assert all(p1.values()) and rows1
+
+    import datetime as dt
+
+    base = dt.datetime(2024, 6, 1)
+    _append_batch(spark, paths["sequences"], seq, 0,
+                  [base + dt.timedelta(seconds=i) for i in range(6)])
+
+    with monkeypatch.context() as m:
+        m.setattr(RunState, "commit_many", _crash)
+        with pytest.raises(RuntimeError, match="crash before manifest"):
+            run_fleet(spark, cfgs, paths["sequences"], state, out_path=out, now=2.0)
+
+    orphans = set(glob.glob(f"{out}/part-*")) - set(state.committed_paths())
+    assert orphans, "crashed tick should have written an orphan part dir"
+    assert {c.reference(): state.pointer(c.reference()) for c in cfgs} == p1
+    assert sorted(r["doc_id"] for r in _committed_rows(spark, state)) == rows1
+
+    run_fleet(spark, cfgs, paths["sequences"], state, out_path=out, now=3.0)
+    got = [r["doc_id"] for r in _committed_rows(spark, state)]
+    assert sorted(got) == sorted(set(got)), "duplicate rows visible after recovery"
+    assert set(got) == set(rows1) | {f"doc_r{i}" for i in range(6)}
 
 
 def test_boundary_equal_pointer_rows_not_lost_not_duplicated(spark, env):

@@ -234,3 +234,22 @@ def test_s3_object_sink_puts_gzip_ndjson_per_partition(spark, tmp_path):
             rows.append(_json.loads(line))
     assert sorted(r["id"] for r in rows) == list(range(8))
     assert parts == {0, 1}
+
+
+def test_write_run_drops_a_dir_without_parquet(tmp_path):
+    """A run-dir write that produced no parquet file is removed and its
+    pending marker cleared: nothing for the commit to publish."""
+    from grove_spark.operators.sinks import write_run
+    from grove_spark.state.runstate import RunState
+
+    state = RunState(str(tmp_path / "state"))
+    run_dir = str(tmp_path / "out" / "part-x")
+    pending = []
+
+    def write(path):
+        pending.append(set(state._pending_paths()))
+        os.makedirs(os.path.join(path, "descriptor=logs"))
+
+    assert write_run(state, run_dir, write, "event_time") == ([], {})
+    assert pending == [{os.path.normpath(run_dir)}]  # registered first
+    assert not os.path.exists(run_dir) and state._pending_paths() == {}

@@ -130,6 +130,42 @@ def test_manifest_sink_exactly_once(spark, fixture_dir, tmp_path):
     assert len(state.committed_paths()) == n_commits
 
 
+def test_manifest_sink_outputs_are_prunable(spark, fixture_dir, tmp_path):
+    """Each micro-batch commits the event_time footer stats of the files
+    it wrote: a manifest_scan at batch 0's pointer keeps only batch 1's
+    files and returns the same rows as the unpruned read."""
+    from grove_spark.operators.dedup import watermark_literal
+    from grove_spark.sources.file_stats import _list_parquet
+    from grove_spark.sources.scans import manifest_scan
+    from grove_spark.state.runstate import RunState
+    from grove_spark.streaming.stream import manifest_sink
+
+    rows = spark.read.parquet(fixture_dir["sequences"]).select(
+        "doc_id", F.lit("logs").alias("descriptor"),
+        F.col("source").alias("connector"), "event_time",
+    )
+    cut = F.lit("2024-01-01 00:02:30").cast("timestamp")  # mid-fixture
+    state = RunState(str(tmp_path / "state"))
+    out = str(tmp_path / "out")
+    sink = manifest_sink(state, out, key="stream.k")
+    sink(rows.where(F.col("event_time") < cut), 0)
+    wm = state.pointer("stream.k")
+    sink(rows.where(F.col("event_time") >= cut), 1)
+
+    ms = manifest_scan(spark, state, pointer_col="event_time", watermark=wm)
+    n_b1 = len(_list_parquet(f"{out}/part-stream.k-b1"))
+    n_all = sum(len(_list_parquet(p)) for p in state.committed_paths())
+    assert ms._grove_prune == {"files_kept": n_b1, "files_total": n_all}
+    assert 0 < n_b1 < n_all
+    full = None
+    for p in state.committed_paths():
+        d = spark.read.option("basePath", p).parquet(p)
+        full = d if full is None else full.unionByName(d, allowMissingColumns=True)
+    full = full.where(F.col("event_time") > watermark_literal(full, "event_time", wm))
+    got = sorted(r["doc_id"] for r in ms.select("doc_id").collect())
+    assert got and got == sorted(r["doc_id"] for r in full.select("doc_id").collect())
+
+
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """Streaming exact dedup: dropDuplicatesWithinWatermark drops
     re-deliveries of the same event id arriving within the watermark
