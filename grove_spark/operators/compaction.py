@@ -29,7 +29,6 @@ output.
 from __future__ import annotations
 
 import os
-from functools import reduce
 from typing import Optional
 
 from pyspark.sql import SparkSession
@@ -54,8 +53,11 @@ def compact_runs(
     A dir is a candidate when every data file in it is under
     ``small_file_bytes`` (a dir with even one right-sized file is
     already fine — rewriting it would churn bytes for nothing). Needs
-    at least ``min_dirs`` candidates to be worth a rewrite. Returns the
-    compaction metrics, or None when there is nothing to do.
+    at least ``min_dirs`` candidates to be worth a rewrite. The
+    candidates are read like every other committed-store reader
+    (``sources/scans.read_runs``): a column only later runs wrote is
+    kept, null in the rows of earlier runs. Returns the compaction
+    metrics, or None when there is nothing to do.
 
     ``sort_within`` (e.g. ``["event_time"]``) range-clusters the
     rewrite by those columns. The hive ``date`` partitioning already
@@ -67,6 +69,7 @@ def compact_runs(
     shuffle, paid once at rewrite."""
     from grove_spark.operators.sinks import write_partitioned_parquet, write_run
     from grove_spark.sources.file_stats import _list_parquet
+    from grove_spark.sources.scans import read_runs
 
     base_version = state.version()
     candidates = []
@@ -91,12 +94,7 @@ def compact_runs(
     if len(candidates) < min_dirs:
         return None
 
-    # one union read across the candidate dirs, partition columns
-    # reconstructed per run dir (each dir is its own hive root)
-    frames = [
-        spark.read.option("basePath", d).parquet(d) for d in sorted(candidates)
-    ]
-    df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    df = read_runs(spark, sorted(candidates))
     # the partitioned writer re-derives `date` from event_time; the read
     # materialized it as a partition column — drop to avoid a duplicate
     if "date" in df.columns:

@@ -187,6 +187,7 @@ def _merge_run(
     bloom_probe_max_keys, stats_cache,
 ) -> Optional[dict]:
     from grove_spark.operators.sinks import write_partitioned_parquet, write_run
+    from grove_spark.sources.scans import read_runs
 
     base_version = state.version()
     root = os.path.normpath(out_path)
@@ -358,12 +359,9 @@ def _merge_run(
     upd_keys = updates.select(*key_cols)
     if broadcast_updates:
         upd_keys = F.broadcast(upd_keys)
-    frames = [
-        spark.read.option("basePath", d).parquet(d) for d in affected_dirs
-    ]
     matched_keys = 0
-    if frames:
-        target = reduce(lambda a, b: a.unionByName(b), frames)
+    if affected_dirs:
+        target = read_runs(spark, affected_dirs)
         if "date" in target.columns:  # the writer re-derives it
             target = target.drop("date")
         if when_matched == "update":

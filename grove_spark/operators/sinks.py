@@ -4,7 +4,10 @@
   ``{descriptor}{connector}/{identity}/{Y}/{m}/{d}/{operation}-....{part}``
   (grove/outputs/aws_s3.py:18-21) IS a partitioning scheme:
   ``partitionBy(descriptor, connector, date)`` on a parquet/text write.
-  ``s3a://`` vs ``file:`` is just the URI.
+  The Spark writer itself takes any URI, but ``write_run`` lists the
+  written files with local-filesystem calls, so a run dir must be a
+  local path: a ``file://`` or ``s3a://`` run dir raises ValueError
+  (sources/file_stats._list_parquet) rather than commit no output.
 * gzip NDJSON (O1) — ``to_json(struct(*))`` + text writer with gzip codec
   (grove/outputs/__init__.py:79-113).
 * stdout (O4) — the envelope format of grove/outputs/local_stdout.py:41-58

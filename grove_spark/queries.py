@@ -3019,6 +3019,7 @@ def q_tokenize_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         detokenize_col,
         run_tokenize_ingest,
     )
+    from grove_spark.sources.scans import read_runs
     from grove_spark.state.runstate import RunState
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
@@ -3041,7 +3042,7 @@ def q_tokenize_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned_ok = int(scan["files_kept"] < scan["files_total"])
     stats_ok = int(bool(rec2.get("file_stats")))
 
-    seq = spark.read.option("basePath", out).parquet(*state.committed_paths())
+    seq = read_runs(spark, state.committed_paths())
     joined = seq.join(docs.select("doc_id", "text"), "doc_id")
     agg = joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

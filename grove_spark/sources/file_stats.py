@@ -27,11 +27,11 @@ listing must never change query RESULTS, only query COST.
 from __future__ import annotations
 
 import datetime as dt
-import glob as _glob
 import hashlib
 import json
 import os
 import tempfile
+import urllib.parse
 from typing import Dict, List, Optional, Tuple
 
 
@@ -118,6 +118,13 @@ def parquet_file_stats(files: List[str], col: str) -> Dict[str, dict]:
 
 
 def _list_parquet(path: str) -> List[str]:
+    """Data files under a LOCAL path. A URI (``file://``, ``s3a://``)
+    raises: listing it with os calls would find nothing, and an empty
+    listing silently drops data from pruned scans and commits."""
+    if urllib.parse.urlparse(path).scheme:
+        raise ValueError(
+            f"{path!r} is a URI; data files are listed from local paths only"
+        )
     if os.path.isfile(path):
         return [path]
     out = []

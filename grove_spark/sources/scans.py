@@ -22,7 +22,8 @@ from __future__ import annotations
 
 import datetime as dt
 import os as _os
-from typing import Optional
+from functools import reduce
+from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,15 +36,14 @@ def incremental_scan(
     watermark: Optional[str] = None,
     delay_s: int = 0,
     now: Optional[dt.datetime] = None,
-    fmt: str = "parquet",
     lookback_s: int = 0,
     prune: bool = False,
     stats_cache=None,
     merge_schema: bool = False,
     inclusive: bool = False,
 ) -> DataFrame:
-    """Watermarked incremental scan with optional consistency delay,
-    lookback re-scan and file-level pruning.
+    """Watermarked incremental parquet scan with optional consistency
+    delay, lookback re-scan and file-level pruning.
 
     ``watermark`` (exclusive lower bound) comes from run-state;
     ``inclusive=True`` re-reads the rows AT it, for a caller that drops
@@ -57,9 +57,9 @@ def incremental_scan(
     content hash (dedup_by_hash with window-wide seen state). All
     predicates push down to the file scan (PushedFilters).
 
-    ``prune=True`` (parquet only) additionally skips WHOLE FILES whose
-    footer min/max cannot intersect the watermark/ceiling window, before
-    the reader ever lists them — the Iceberg manifest-pruning analog
+    ``prune=True`` additionally skips WHOLE FILES whose footer min/max
+    cannot intersect the watermark/ceiling window, before the reader
+    ever lists them — the Iceberg manifest-pruning analog
     (sources/file_stats.py). ``stats_cache`` (a FileStatsCache or a
     directory path) keeps footer reads incremental across runs: only
     new/changed files are opened. The row predicate stays on the scan —
@@ -79,7 +79,7 @@ def incremental_scan(
     if delay_s > 0:
         _now = now or dt.datetime.now(dt.timezone.utc)
         ceiling_py = (_now - dt.timedelta(seconds=delay_s)).replace(tzinfo=None)
-    if prune and fmt == "parquet" and (watermark is not None or ceiling_py is not None):
+    if prune and (watermark is not None or ceiling_py is not None):
         from grove_spark.sources.file_stats import (
             FileStatsCache,
             _to_comparable,
@@ -143,9 +143,9 @@ def incremental_scan(
         return df
 
     reader = spark.read
-    if merge_schema and fmt == "parquet":
+    if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    df = reader.format(fmt).load(path)
+    df = reader.parquet(path)
     return _apply_window(
         df, pointer_col, watermark, lookback_s, ceiling_py, inclusive
     )
@@ -265,13 +265,42 @@ def orc_log_scan(
     return df
 
 
+def read_runs(
+    spark: SparkSession,
+    dirs: Sequence[str],
+    kept: Optional[Mapping[str, Sequence[str]]] = None,
+) -> DataFrame:
+    """The one reader of committed run dirs: each dir is its own hive
+    root (``basePath``), so the partition columns (descriptor/connector/
+    date) reconstruct per dir, and the per-dir reads union by name in
+    the order of ``dirs`` — a column only some runs wrote (a store whose
+    schema evolved) reads as null in the others.
+
+    ``kept`` maps a dir to the files to read from it (a pruned listing);
+    a dir it gives no file is skipped. When no file is kept at all the
+    result is the empty frame with the union schema of every dir, so a
+    caller's select never forks on what pruning kept."""
+    if not dirs:
+        raise ValueError("manifest has no committed data paths to scan")
+    frames = [
+        spark.read.option("basePath", d).parquet(
+            *([d] if kept is None else kept[d])
+        )
+        for d in dirs if kept is None or kept.get(d)
+    ]
+    if not frames:
+        return read_runs(spark, dirs).where(F.lit(False))
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+
+
 def manifest_scan(
     spark: SparkSession,
     state,
     pointer_col: Optional[str] = None,
     watermark: Optional[str] = None,
     inclusive: bool = False,
-    base_path: Optional[str] = None,
     as_of: Optional[int] = None,
 ) -> DataFrame:
     """Read back the COMMITTED outputs of a run-state manifest with
@@ -283,81 +312,43 @@ def manifest_scan(
     original dirs, and data expired by retention is gone (same contract
     as expired snapshots).
 
-    The file listing comes from the manifest (``committed_paths``) — a
-    crashed run's orphan directories are invisible, exactly like reading
-    an Iceberg snapshot. With a ``watermark``, files whose recorded
-    pointer max is behind it are dropped from the listing WITHOUT
-    opening any footer: the stats were collected by the writer at commit
-    time. Files the manifest has no stats for on ``pointer_col`` (stats
-    of another column, untagged stats of older manifests) are kept
-    conservatively. The row-level predicate is applied regardless —
-    pruning changes cost, never results."""
+    The dirs and the file stats come from ONE walk of the manifest
+    (``RunState.committed``) — a crashed run's orphan directories are
+    invisible, exactly like reading an Iceberg snapshot. With a
+    ``watermark``, files whose recorded pointer max is behind it are
+    dropped from each dir's listing WITHOUT opening any footer: the
+    stats were collected by the writer at commit time. Files the
+    manifest has no stats for on ``pointer_col`` (stats of another
+    column, untagged stats of older manifests) are kept
+    conservatively. The kept files are read by ``read_runs``, in dir
+    name order, and the row predicate of ``incremental_scan`` applies
+    regardless — pruning changes cost, never results."""
     from grove_spark.sources.file_stats import _list_parquet, prune_files
 
-    paths = state.committed_paths(as_of=as_of)
-    all_files = [f for p in paths for f in _list_parquet(p)]
-    if pointer_col and watermark is not None and all_files:
-        stats = state.committed_file_stats(as_of=as_of)
+    paths, stats = state.committed(as_of=as_of)
+    listed = {p: _list_parquet(p) for p in sorted(paths)}
+    total = sum(len(fs) for fs in listed.values())
+    if not total:
+        raise ValueError("manifest has no committed data paths to scan")
+    if pointer_col and watermark is not None:
         # an entry describes the column it was collected for: one for
         # another column, or untagged (older manifests), is stat-less
         merged = {
             f: stats[f] if stats.get(f, {}).get("col") == pointer_col
             else {"min": None, "max": None}
-            for f in all_files
+            for fs in listed.values() for f in fs
         }
-        kept, total = prune_files(
+        keep = set(prune_files(
             "", pointer_col, watermark, inclusive=inclusive, stats=merged
-        )
-    else:
-        kept, total = all_files, len(all_files)
-    if not all_files:
-        raise ValueError("manifest has no committed data paths to scan")
-    if kept:
-        # group kept files under their committed run directory so hive
-        # partition columns (descriptor/connector/date) reconstruct: each
-        # run dir is its own basePath, the per-run frames union
-        import os as _os
-        from functools import reduce
-
-        norm_paths = sorted((_os.path.normpath(p) for p in paths),
-                            key=len, reverse=True)
-        by_dir: dict = {}
-        for f in kept:
-            d = next(
-                (p for p in norm_paths
-                 if _os.path.normpath(f).startswith(p + _os.sep)),
-                base_path or _os.path.dirname(f),
-            )
-            by_dir.setdefault(d, []).append(f)
-        frames = [
-            spark.read.option("basePath", d).parquet(*fs)
-            for d, fs in sorted(by_dir.items())
-        ]
-        df = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-        )
-    else:
-        # ALL files pruned: build the empty frame exactly like the kept
-        # branch — per-run-dir basePath reads unioned — so discovered
-        # hive partition columns (descriptor/connector/date) are
-        # identical regardless of pruning outcome; a bare multi-root
-        # read here could infer a different schema and turn a caller's
-        # select on those columns into an AnalysisException on an
-        # all-pruned watermark (ADVICE r4).
-        from functools import reduce
-
-        frames = [spark.read.option("basePath", p).parquet(p) for p in sorted(paths)]
-        df = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-        ).where(F.lit(False))
+        )[0])
+        listed = {d: [f for f in fs if f in keep] for d, fs in listed.items()}
+    df = read_runs(spark, list(listed), kept=listed)
     if pointer_col and watermark is not None:
-        from grove_spark.operators.dedup import watermark_literal
-
-        lo = watermark_literal(df, pointer_col, watermark)
-        df = df.where(
-            F.col(pointer_col) >= lo if inclusive else F.col(pointer_col) > lo
-        )
-    df._grove_prune = {"files_kept": len(kept), "files_total": total}  # type: ignore[attr-defined]
+        df = _apply_window(df, pointer_col, watermark, 0, None, inclusive)
+    df._grove_prune = {  # type: ignore[attr-defined]
+        "files_kept": sum(len(fs) for fs in listed.values()),
+        "files_total": total,
+    }
     return df
 
 
@@ -394,9 +385,6 @@ def incremental_append_scan(
             "Re-read the store (manifest_scan) or pass "
             "ignore_mutations=True to consume only the appends."
         )
-    from functools import reduce
-
-    dirs = [d for d in info["appended"] if _os.path.isdir(d)]
     missing = [d for d in info["appended"] if not _os.path.isdir(d)]
     if missing:
         raise ValueError(
@@ -404,23 +392,10 @@ def incremental_append_scan(
             "— retention (expire_runs) is the reader barrier; consume "
             "incrementals before it reclaims replaced dirs."
         )
-    if dirs:
-        frames = [
-            spark.read.option("basePath", d).parquet(d) for d in dirs
-        ]
-        df = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-        )
+    if info["appended"]:
+        df = read_runs(spark, info["appended"])
     else:
-        base = state.committed_paths(as_of=as_of)
-        if not base:
-            raise ValueError("manifest has no committed data paths to scan")
-        frames = [
-            spark.read.option("basePath", p).parquet(p) for p in sorted(base)
-        ]
-        df = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-        ).where(F.lit(False))
+        df = read_runs(spark, sorted(state.committed_paths(as_of=as_of)), kept={})
     df._grove_incremental = info  # type: ignore[attr-defined]
     return df
 

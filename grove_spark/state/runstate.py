@@ -184,35 +184,51 @@ class RunState:
         with open(self._key_file(key, gen)) as f:
             return json.load(f)
 
+    def _run_files(self) -> List[tuple]:
+        """(version, path) of every file under ``runs/``, in version
+        order — the one walk of the run log. Foreign names are skipped;
+        callers decide which versions to trust."""
+        out: List[tuple] = []
+        for p in _glob.glob(os.path.join(self._runs_dir, "*.json")):
+            try:
+                out.append((int(os.path.splitext(os.path.basename(p))[0]), p))
+            except ValueError:  # pragma: no cover - foreign file
+                continue
+        return sorted(out)
+
+    def _run_docs(
+        self, root: Optional[dict] = None, as_of: Optional[int] = None
+    ) -> List[tuple]:
+        """(version, run file document) pairs in commit order. Only files
+        whose version <= the root version are trusted — a crashed
+        commit's run file is invisible until that version actually
+        publishes. ``as_of`` caps the view at an older version (snapshot
+        read)."""
+        root = root or self._load_root()
+        ceiling = root["version"] if as_of is None else min(as_of, root["version"])
+        out: List[tuple] = []
+        for v, p in self._run_files():
+            if v > ceiling:
+                break
+            with open(p) as f:
+                out.append((v, json.load(f)))
+        return out
+
     def _run_records(
         self, root: Optional[dict] = None, as_of: Optional[int] = None
     ) -> List[dict]:
-        """All committed run records in commit order. Only files whose
-        version <= the root version are trusted — a crashed commit's
-        run file is invisible until that version actually publishes.
-        ``as_of`` caps the view at an older version (snapshot read)."""
+        """All committed run records in commit order."""
         return [r for _, r in self._run_records_versioned(root=root, as_of=as_of)]
 
     def _run_records_versioned(
         self, root: Optional[dict] = None, as_of: Optional[int] = None
     ) -> List[tuple]:
         """(version, record) pairs in commit order — the windowed view
-        incremental readers need. Only files whose version <= the root
-        version are trusted; ``as_of`` caps the view at an older
-        version (snapshot read)."""
-        root = root or self._load_root()
-        ceiling = root["version"] if as_of is None else min(as_of, root["version"])
-        out: List[tuple] = []
-        for p in sorted(_glob.glob(os.path.join(self._runs_dir, "*.json"))):
-            try:
-                v = int(os.path.splitext(os.path.basename(p))[0])
-            except ValueError:  # pragma: no cover - foreign file
-                continue
-            if v > ceiling:
-                continue
-            with open(p) as f:
-                out.extend((v, r) for r in json.load(f)["records"])
-        return out
+        incremental readers need."""
+        return [
+            (v, r) for v, doc in self._run_docs(root=root, as_of=as_of)
+            for r in doc["records"]
+        ]
 
     def _load(self) -> dict:
         """Debug/compat view assembling the full state (the round-2
@@ -507,6 +523,13 @@ class RunState:
             entries = []
             old_gens = []
             committed_paths = []
+            # per-file pointer-column min/max collected by the WRITER
+            # (one footer read per freshly-written file): downstream
+            # consumers prune committed outputs from the manifest alone,
+            # never re-opening footers — the Iceberg data-file stats
+            # analog. Stored ONCE per run file, beside the records: a
+            # fleet tick's members share one run dir and its stats
+            file_stats: Dict[str, dict] = {}
             for u in updates:
                 key = u["key"]
                 prev = self._read_entry(key, root) or {}
@@ -526,13 +549,7 @@ class RunState:
                     "metrics": u.get("metrics") or {},
                     "data_paths": u.get("data_paths") or [],
                 }
-                if u.get("file_stats"):
-                    # per-file pointer-column min/max collected by the
-                    # WRITER (one footer read per freshly-written file):
-                    # downstream consumers prune committed outputs from
-                    # the manifest alone, never re-opening footers — the
-                    # Iceberg data-file stats analog
-                    rec["file_stats"] = u["file_stats"]
+                file_stats.update(u.get("file_stats") or {})
                 if u.get("replaces"):
                     # a REWRITE record (compaction/merge): the listed
                     # data dirs are superseded by this record's
@@ -548,7 +565,10 @@ class RunState:
             # conditional write FIRST: only the claim winner may touch
             # key generations at this version (otherwise two cross-host
             # drivers interleave generation overwrites)
-            self._claim_version(v, {"records": records})
+            doc: Dict[str, Any] = {"records": records}
+            if file_stats:
+                doc["file_stats"] = file_stats
+            self._claim_version(v, doc)
             for key, entry in entries:
                 _atomic_write(self._key_file(key, v), entry)
                 old_gens.append((key, root["entries"].get(key)))
@@ -578,11 +598,7 @@ class RunState:
         cross-host commits (claimed or published) this scan's snapshot
         never saw. Normpath'd for orphan comparison."""
         refs: set = set()
-        for p in _glob.glob(os.path.join(self._runs_dir, "*.json")):
-            try:
-                fv = int(os.path.splitext(os.path.basename(p))[0])
-            except ValueError:  # pragma: no cover
-                continue
+        for fv, p in self._run_files():
             if fv <= root_version:
                 continue
             try:
@@ -743,17 +759,7 @@ class RunState:
     ) -> dict:
         with self._exclusive():
             root = self._load_root()
-            per_file: List[tuple] = []  # (version, record)
-            for p in sorted(_glob.glob(os.path.join(self._runs_dir, "*.json"))):
-                try:
-                    v = int(os.path.splitext(os.path.basename(p))[0])
-                except ValueError:  # pragma: no cover
-                    continue
-                if v > root["version"]:
-                    continue
-                with open(p) as f:
-                    for r in json.load(f)["records"]:
-                        per_file.append((v, r))
+            per_file = self._run_records_versioned(root=root)
             per_key: Dict[str, list] = {}
             for i, (_, h) in enumerate(per_file):
                 per_key.setdefault(h["key"], []).append(i)
@@ -789,7 +795,6 @@ class RunState:
                     break
             keep = [(v, h) for i, (v, h) in enumerate(per_file) if i in keep_idx]
             expired = [h for i, (_, h) in enumerate(per_file) if i not in keep_idx]
-            norm = os.path.normpath
             # dirs superseded by a rewrite record are dead for readers
             # regardless of their original record's retention bucket —
             # retention is the reader barrier that finally reclaims them
@@ -894,11 +899,7 @@ class RunState:
                 # claim also blocks the version bump below from landing
                 # on it.
                 live_claims = set()
-                for p in _glob.glob(os.path.join(self._runs_dir, "*.json")):
-                    try:
-                        v = int(os.path.splitext(os.path.basename(p))[0])
-                    except ValueError:  # pragma: no cover
-                        continue
+                for v, p in self._run_files():
                     if v > root["version"]:
                         if self._claim_is_dead(p, v):
                             with contextlib.suppress(FileNotFoundError):
@@ -941,13 +942,9 @@ class RunState:
                 # root would then reference missing files. Protect every
                 # above-root version visible NOW; dead ones get one
                 # cycle of shelter and are collected next pass.
-                for p in _glob.glob(os.path.join(self._runs_dir, "*.json")):
-                    try:
-                        fv = int(os.path.splitext(os.path.basename(p))[0])
-                    except ValueError:  # pragma: no cover
-                        continue
-                    if fv > root["version"]:
-                        live_claims.add(fv)
+                live_claims.update(
+                    fv for fv, _ in self._run_files() if fv > root["version"]
+                )
                 for h, lst in gens_by_hash.items():
                     r = ref_by_hash.get(h)
                     prev = (
@@ -969,20 +966,21 @@ class RunState:
                 by_version: Dict[int, list] = {}
                 for v, h in keep:
                     by_version.setdefault(v, []).append(h)
-                for p in sorted(_glob.glob(os.path.join(self._runs_dir, "*.json"))):
-                    try:
-                        v = int(os.path.splitext(os.path.basename(p))[0])
-                    except ValueError:  # pragma: no cover
-                        continue
+                for v, p in self._run_files():
                     if v > root["version"]:
                         continue
                     new_records = by_version.get(v, [])
                     with open(p) as f:
-                        cur = json.load(f)["records"]
-                    if cur == new_records:
+                        doc = json.load(f)
+                    if doc["records"] == new_records:
                         continue
                     if new_records:
-                        _atomic_write(p, {"records": new_records})
+                        kept_doc = {"records": new_records}
+                        if "file_stats" in doc:
+                            # the run's file stats stay while any of
+                            # its records survives
+                            kept_doc["file_stats"] = doc["file_stats"]
+                        _atomic_write(p, kept_doc)
                     else:
                         os.remove(p)
                 # the retention pass consumes a version, CLAIMED like
@@ -1016,40 +1014,41 @@ class RunState:
             "orphans_deleted": sorted(orphans),
         }
 
-    def committed_paths(self, as_of: Optional[int] = None) -> list:
-        """Every data path any manifested run published — what a reader
-        may consume. Orphan part-dirs from crashed runs are invisible,
-        and dirs SUPERSEDED by a later rewrite record (compaction) drop
-        out the instant the rewrite publishes.
+    def committed(self, as_of: Optional[int] = None) -> tuple:
+        """``(paths, file_stats)`` of the manifest, from one pass over
+        the run log.
+
+        ``paths`` is every data path any manifested run published — what
+        a reader may consume. Orphan part-dirs from crashed runs are
+        invisible, and dirs SUPERSEDED by a later rewrite record
+        (compaction) drop out the instant the rewrite publishes.
+        ``file_stats`` is the writer-recorded per-file pointer stats of
+        every run (later runs win on a rewritten path).
 
         ``as_of`` is the TIME-TRAVEL read (Iceberg snapshot-id scan):
-        the listing as of that root version — a rewrite committed after
+        the manifest as of that root version — a rewrite committed after
         it does not hide the original dirs, which is why retention (not
         the rewrite) deletes them. Versions older than what
         ``expire_runs`` has already trimmed are a best-effort view, the
         same contract as expired Iceberg snapshots."""
-        out: list = []
+        published: Dict[str, None] = {}  # ordered set
         replaced = set()
-        records = self._run_records(as_of=as_of)
-        for h in records:
-            for p in h.get("replaces") or []:
-                replaced.add(os.path.normpath(p))
-        for h in records:
-            for p in h["data_paths"]:
-                if os.path.normpath(p) in replaced:
-                    continue
-                if p not in out:  # fleet runs share one dir across connectors
-                    out.append(p)
-        return out
+        file_stats: Dict[str, dict] = {}
+        for _, doc in self._run_docs(as_of=as_of):
+            for h in doc["records"]:
+                replaced.update(os.path.normpath(p) for p in h.get("replaces") or [])
+                # fleet runs share one dir across connectors
+                published.update(dict.fromkeys(h["data_paths"]))
+                # manifests written before the run file held the
+                # stats once keep them per record
+                file_stats.update(h.get("file_stats") or {})
+            file_stats.update(doc.get("file_stats") or {})
+        paths = [p for p in published if os.path.normpath(p) not in replaced]
+        return paths, file_stats
 
-
-    def committed_file_stats(self, as_of: Optional[int] = None) -> Dict[str, dict]:
-        """Writer-recorded per-file pointer stats across every
-        manifested run (later runs win on a rewritten path)."""
-        out: Dict[str, dict] = {}
-        for h in self._run_records(as_of=as_of):
-            out.update(h.get("file_stats") or {})
-        return out
+    def committed_paths(self, as_of: Optional[int] = None) -> list:
+        """The data paths of ``committed``."""
+        return self.committed(as_of=as_of)[0]
 
     def incremental_paths(
         self, since_version: int, as_of: Optional[int] = None
@@ -1117,7 +1116,10 @@ class RunState:
         """The manifested run record for ``run_id`` (pointer, metrics,
         data_paths, file_stats) — the public surface for reading a
         run's telemetry; consumers never touch the manifest layout."""
-        for h in self._run_records():
-            if h["run_id"] == run_id:
-                return h
+        for _, doc in self._run_docs():
+            for h in doc["records"]:
+                if h["run_id"] == run_id:
+                    if h["data_paths"] and doc.get("file_stats"):
+                        return {**h, "file_stats": doc["file_stats"]}
+                    return h
         return None

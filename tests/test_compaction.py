@@ -75,7 +75,7 @@ def test_compaction_swaps_atomically_and_preserves_rows(spark, env):
 
     # writer-recorded stats survive: manifest_scan prunes the compacted
     # table without reopening footers
-    fstats = state.committed_file_stats()
+    fstats = state.committed()[1]
     assert all(f in fstats for f in _list_parquet(res["new_dir"]))
     wm = "2024-05-31 23:59:59"
     ms = manifest_scan(spark, state, pointer_col="event_time", watermark=wm)

@@ -835,6 +835,45 @@ def test_run_fleet_outputs_are_prunable(spark, tmp_path):
     assert got and got == _unpruned_rows(spark, state, "event_time", wm)
 
 
+def test_fleet_tick_stores_file_stats_once(spark, tmp_path):
+    """A 4-member tick stores each written file's footer stats once in
+    its run file, not once per member record; after retention trims
+    one member's record of that tick, a manifest_scan still prunes the
+    tick's files."""
+    from grove_spark.sources.file_stats import _list_parquet
+    from grove_spark.sources.scans import manifest_scan
+
+    seq = _history(tmp_path)
+    cfgs = _fleet(
+        ("okta_system_log", "a", "okta", 0),
+        ("github_audit", "a", "github", 0),
+        ("github_audit", "b", "github", 0),
+        ("okta_system_log", "b", "okta", 0),
+    )
+    state = RunState(str(tmp_path / "state"))
+    out = str(tmp_path / "out")
+    r1 = run_fleet(spark, cfgs, seq, state, out_path=out, now=1.0)
+    assert len(r1["per_key"]) == 4
+    files = _list_parquet(f"{out}/part-{r1['run_id']}")
+    with open(state._run_file(state.version())) as f:
+        text = f.read()
+    assert files and all(text.count(json.dumps(f)) == 1 for f in files)
+
+    wm = max(state.pointer(c.reference()) for c in cfgs)
+    _append_batch(seq, 1)
+    r2 = run_fleet(spark, cfgs, seq, state, out_path=out, now=2.0)
+    ref = cfgs[0].reference()
+    state.commit(ref, state.new_run_id(), pointer=state.pointer(ref))
+    assert state.expire_runs(keep_last=2)["expired_records"] == 1
+    assert r1["run_id"] in "".join(state.committed_paths())
+
+    ms = manifest_scan(spark, state, pointer_col="event_time", watermark=wm)
+    n_tick2 = len(_list_parquet(f"{out}/part-{r2['run_id']}"))
+    assert ms._grove_prune == {
+        "files_kept": n_tick2, "files_total": n_tick2 + len(files),
+    }
+
+
 def test_member_names_with_quotes_route(spark, fixture_dir):
     """Member keys reach the plan as quoted SQL literals (one parsed IN
     per list): identities holding quotes and backslashes still route

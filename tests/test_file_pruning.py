@@ -194,7 +194,7 @@ def test_resumed_run_reads_strict_subset_of_files(spark, tmp_path):
     assert committed
 
     # writer-recorded output stats landed in the manifest
-    fstats = state.committed_file_stats()
+    fstats = state.committed()[1]
     out_files = [f for p in state.committed_paths() for f in _list_parquet(p)]
     assert out_files and all(f in fstats for f in out_files)
 
@@ -331,3 +331,27 @@ def test_schema_evolution_merge_on_incremental_scan(spark, tmp_path):
                             prune=True, merge_schema=True)
     assert set(both.columns) == {"seq", "v1", "v2"}
     assert both.count() == 149
+
+
+def test_uri_paths_raise_instead_of_listing_empty(spark, tmp_path):
+    """Data files are listed with local-filesystem calls, which find
+    nothing at a URI: a pruned scan and a run-dir write given a
+    ``file://`` path raise instead of returning an empty listing (the
+    scan would drop every row, the commit would leave the written dir
+    out of the manifest)."""
+    from grove_spark.operators.sinks import write_run
+
+    src = str(tmp_path / "src")
+    df = spark.range(0, 24).select(F.col("id").alias("seq"))
+    df.coalesce(2).write.parquet(src)
+    # the bare path and the unpruned URI read the rows
+    assert incremental_scan(spark, src, "seq", watermark="-1", prune=True).count() == 24
+    assert incremental_scan(spark, "file://" + src, "seq", watermark="-1").count() == 24
+    with pytest.raises(ValueError, match="URI"):
+        incremental_scan(spark, "file://" + src, "seq", watermark="5", prune=True)
+
+    state = RunState(str(tmp_path / "state"))
+    run_dir = "file://" + str(tmp_path / "out" / "part-b")
+    with pytest.raises(ValueError, match="URI"):
+        write_run(state, run_dir, df.write.parquet, "seq")
+    assert state.committed_paths() == []

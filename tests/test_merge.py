@@ -316,3 +316,78 @@ def test_rewrite_write_is_rebalanced(spark, tmp_path):
     files = glob.glob(res["new_dir"] + "/**/*.parquet", recursive=True)
     # 110 rows in 2 hive date dirs: a handful of files, not ~dozens
     assert 0 < len(files) <= 8, files
+
+
+WIDE = StructType(SCHEMA.fields + [StructField("region", StringType())])
+
+
+def _evolved_store(spark, root):
+    """Two committed run dirs (``part-r1`` then ``part-r2``); the second
+    run added a ``region`` column the first never wrote."""
+    from grove_spark.operators.sinks import write_run
+
+    state = RunState(str(root / "state"))
+    out = str(root / "out")
+    frames = [
+        ("r1", spark.createDataFrame(_rows(range(0, 100)), SCHEMA)),
+        ("r2", spark.createDataFrame(
+            [r + (f"eu{r[0] % 3}",) for r in _rows(range(100, 200))], WIDE
+        )),
+    ]
+    for run_id, df in frames:
+        data_paths, stats = write_run(
+            state, os.path.join(out, f"part-{run_id}"),
+            lambda d, df=df: write_partitioned_parquet(df.repartition(2), d),
+            "event_time",
+        )
+        state.commit("gate", run_id, data_paths=data_paths, file_stats=stats)
+    return state, out
+
+
+def _by_id(df, cols):
+    return {r["event_id"]: tuple(r) for r in df.select(*cols).collect()}
+
+
+def test_readers_agree_on_schema_evolved_store(spark, tmp_path):
+    """Every committed-store reader unions run dirs the same way: the
+    added column is kept, null in the first run's rows. merge_into
+    deletes and updates a key in each dir; the result is the store
+    before the merge with those keys deleted or replaced."""
+    from grove_spark.operators.compaction import compact_runs
+    from grove_spark.sources.scans import incremental_append_scan
+
+    state, out = _evolved_store(spark, tmp_path / "read")
+    before = manifest_scan(spark, state)
+    cols = [c for c in before.columns if c != "date"]
+    assert "region" in cols
+    rows = _by_id(before, cols)
+    assert len(rows) == 200
+    assert {rows[i][cols.index("region")] for i in range(100)} == {None}
+    appended = incremental_append_scan(spark, state, 0)
+    assert appended.columns == before.columns
+    assert _by_id(appended, cols) == rows
+
+    keys = [5, 150]
+    state, out = _evolved_store(spark, tmp_path / "delete")
+    key_df = spark.createDataFrame(
+        [(k,) for k in keys], StructType([StructField("event_id", LongType())])
+    )
+    res = merge_into(spark, state, out, key_df, ["event_id"], when_matched="delete")
+    assert res["rows_deleted"] == 2 and res["dirs_rewritten"] == 2
+    want = {i: r for i, r in rows.items() if i not in keys}
+    assert _by_id(manifest_scan(spark, state), cols) == want
+
+    state, out = _evolved_store(spark, tmp_path / "update")
+    upd = spark.createDataFrame(
+        [r + ("patched",) for r in _rows(keys, typ="patched")], WIDE
+    )
+    res = merge_into(spark, state, out, upd, ["event_id"], when_matched="update")
+    assert (res["rows_updated"], res["rows_inserted"]) == (2, 0)
+    patched = _by_id(upd, cols)
+    assert _by_id(manifest_scan(spark, state), cols) == {**rows, **patched}
+
+    state, out = _evolved_store(spark, tmp_path / "compact")
+    assert compact_runs(spark, state, out, small_file_bytes=1 << 30) is not None
+    compacted = manifest_scan(spark, state)
+    assert sorted(compacted.columns) == sorted(before.columns)
+    assert _by_id(compacted, cols) == rows

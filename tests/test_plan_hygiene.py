@@ -384,6 +384,51 @@ def test_commit_protocol_has_one_implementation():
             assert callers(rel, name) <= {"commit_keyed"}, (rel, name)
 
 
+def test_committed_store_has_one_reader():
+    """The read half of the manifest has one implementation:
+    sources/scans.read_runs is the only code that turns committed run
+    dirs into a frame (ann_index's basePath reads are index cells, and
+    incremental_scan reads a source dir, not run dirs), and RunState
+    walks its run log in one method."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "grove_spark"
+
+    def holders(rel, text):
+        """(file, function) pairs whose source holds ``text``; methods
+        count under their own name."""
+        src = (pkg / rel).read_text()
+        out = set()
+        for top in ast.parse(src).body:
+            for node in top.body if isinstance(top, ast.ClassDef) else [top]:
+                if text in (ast.get_source_segment(src, node) or ""):
+                    out.add((rel, getattr(node, "name", "<module>")))
+        return out
+
+    base_path = {
+        h for p in pkg.rglob("*.py")
+        for h in holders(str(p.relative_to(pkg)), 'option("basePath"')
+        if h[0] != "operators/ann_index.py"
+    }
+    assert base_path == {
+        ("sources/scans.py", "read_runs"),
+        ("sources/scans.py", "incremental_scan"),
+    }
+    unions = {
+        h for rel in ("sources/scans.py", "operators/compaction.py",
+                      "operators/merge.py")
+        for h in holders(rel, "unionByName")
+    }
+    assert unions == {
+        ("sources/scans.py", "read_runs"),
+        ("operators/merge.py", "_merge_run"),  # the upsert union
+    }
+    assert holders(
+        "state/runstate.py", "glob(os.path.join(self._runs_dir"
+    ) == {("state/runstate.py", "_run_files")}
+
+
 def test_perfbench_spanned_names_resolve():
     """Every (owner, attr) the benchmark's tracer wraps still exists: a
     name that no longer resolves fails every traced op."""

@@ -374,3 +374,36 @@ def test_slow_writer_survives_marker_ttl(tmp_path):
     res2 = state.expire_runs(delete_orphans_under=str(out), pending_ttl_s=60.0)
     assert str(slow) in res2["orphans_deleted"] and not slow.exists()
     assert not os.listdir(os.path.join(state.root, "pending"))
+
+
+def test_file_stats_stored_once_per_run_and_legacy_records_read(tmp_path):
+    """Every update's file stats land once in the run file, beside the
+    records; run files written with per-record stats still read."""
+    st = RunState(str(tmp_path / "s"))
+    d = str(tmp_path / "out" / "part-r1")
+    stats = {f"{d}/f{i}.parquet": {"min": i, "max": i, "kind": "num", "col": "seq"}
+             for i in range(3)}
+    st.commit_many(
+        [{"key": k, "data_paths": [d], "file_stats": stats} for k in "abcd"]
+        + [{"key": "e"}],
+        "r1",
+    )
+    with open(st._run_file(st.version())) as f:
+        text = f.read()
+    assert all(text.count(json.dumps(p)) == 1 for p in stats)
+    assert st.committed() == ([d], stats)
+    assert st.run_record("r1")["file_stats"] == stats
+
+    # a run file of the per-record shape (each record holds its stats)
+    legacy_dir = str(tmp_path / "out" / "part-r0")
+    legacy = {f"{legacy_dir}/f.parquet": {"min": 9, "max": 9, "kind": "num"}}
+    with open(st._run_file(1)) as f:
+        doc = json.load(f)
+    doc = {"records": [
+        {**r, "data_paths": [legacy_dir], "file_stats": legacy, "run_id": "r0"}
+        for r in doc["records"]
+    ]}
+    with open(st._run_file(1), "w") as f:
+        json.dump(doc, f)
+    assert st.committed() == ([legacy_dir], legacy)
+    assert st.run_record("r0")["file_stats"] == legacy
