@@ -9,13 +9,14 @@ is Spark-first from scratch.
 
 Scale shape (the 100 TB plan):
 
-* corpus grams are hashed per row by an Arrow kernel
-  (``dedup_fuzzy.hashed_gram_rows``: gram byte ranges hashed off the
-  string buffer, one row per distinct gram id) — embarrassingly
-  parallel, no shuffle until the aggregation. It is the only corpus-side
-  form; its expression twin is a spec under ``tests/``;
-* the benchmark side is DISTINCT-ed and hashed to 64-bit ids, so the
-  probe join moves 8-byte longs, never gram text. Benchmarks are tiny
+* corpus, benchmark and streamed grams all come from the one gram-set
+  kernel (``dedup_fuzzy.hashed_gram_rows`` over ``hashed_shingle_sets``:
+  gram byte ranges hashed off the string buffer, one row per distinct
+  gram id) — embarrassingly parallel, no shuffle until the aggregation.
+  No gram string is ever built; the string form is a spec under
+  ``tests/``;
+* the benchmark side is its DISTINCT gram ids, so the probe join moves
+  8-byte longs, never gram text. Benchmarks are tiny
   next to a training corpus (10^6-10^7 grams vs 10^12), so the gram set
   broadcasts and the corpus side NEVER shuffles for the join — the whole
   job is scan → gram kernel → broadcast-probe → partial-agg groupBy(doc).
@@ -34,20 +35,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grove_spark.operators.dedup_fuzzy import (
-    _distinct_grams,
-    hashed_gram_rows,
-    word_shingles,
-)
+from grove_spark.operators.dedup_fuzzy import hashed_gram_rows
 
 
 def _bench_grams(benchmark: DataFrame, text_col: str, n: int) -> DataFrame:
     """The hashed benchmark gram set — the JOIN CONTRACT shared by the
     batch and streaming scorers (one definition: a hashing/normalization
     change cannot silently break batch/stream parity)."""
+    rows = hashed_gram_rows(
+        benchmark.select(F.lit(0).alias("__b"), text_col), n, "__b", text_col
+    )
     return (
-        word_shingles(benchmark.select(text_col), text_col, n)
-        .select(F.xxhash64("shingle").alias("__g"))
+        rows.where(F.col("__g").isNotNull())
+        .select("__g")
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
@@ -143,7 +143,8 @@ def contamination_scores_stream(
     """Streaming-native contamination scoring: documents arrive as a
     STREAM, the benchmark is static.
 
-    Shape: explode shingles (stateless, carries the event time) →
+    Shape: gram-id rows from the gram-set kernel (stateless; the event
+    time rides in a struct id beside the doc id) →
     stream-static broadcast join against the hashed benchmark grams
     (no state — the static side ships with every task) → watermarked
     per-document aggregation keyed on (event time, doc id), emitted in
@@ -168,13 +169,13 @@ def contamination_scores_stream(
     shingle hash, e.g. a previous call's attribute) whose caching the
     caller owns entirely.
     """
-    # hash before the explode (same r6 rewrite as the batch twin): the
-    # streamed shingle rows are 8-byte longs, never gram strings
-    sh = docs.select(
-        id_col, time_col,
-        F.explode(
-            F.transform(_distinct_grams(text_col, n), lambda g: F.xxhash64(g))
-        ).alias("__g"),
+    # the same gram rows as the batch twin; gramless docs' null-gram
+    # rows are dropped, so a short doc emits no row
+    doc = F.struct(id_col, time_col).alias("__doc")
+    sh = (
+        hashed_gram_rows(docs.select(doc, text_col), n, "__doc", text_col)
+        .where(F.col("__g").isNotNull())
+        .select(f"__doc.{time_col}", f"__doc.{id_col}", "__g")
     )
     if benchmark_grams is None:
         benchmark_grams = _bench_grams(benchmark, text_col, n).persist()

@@ -3,7 +3,9 @@
 Spark-first implementations over a ``documents(doc_id, text, ...)`` table:
 
 * exact        — hash groupBy (operators/dedup.py)
-* n-gram Jaccard — shingle explode + self-join on shingle + count ratio
+* n-gram Jaccard / containment — gram-id rows from the one gram-set
+  kernel (``hashed_shingle_sets``) + self-join on the 64-bit gram id +
+  count ratio
 * MinHash + LSH  — k hash functions over shingles (Spark's xxhash64 with
   per-function seeds, computed by a vectorized Arrow kernel), banded
   into buckets, candidate pairs from bucket joins, optional
@@ -25,43 +27,12 @@ never a single quadratic in-row array.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-
-
-def _distinct_grams(text_col: str, n: int):
-    """DISTINCT word n-gram shingle array for one document row — THE
-    shingle definition. The expression paths (word_shingles, the
-    benchmark gram set, streaming decontamination) build on it, and the
-    Arrow gram kernels (hashed_shingle_sets, hashed_gram_rows,
-    minhash_signatures) are tested against specs built on it, so no two
-    operators disagree on what a shingle is.
-
-    Documents with fewer than ``n`` words yield an empty array —
-    guarded explicitly: ``sequence(0, k-1)`` with k=0 yields a
-    DESCENDING [0,-1] in Spark and the slice at start 0 throws
-    INVALID_PARAMETER_VALUE.START."""
-    words = F.split(F.col(text_col), " ")
-    k = F.size(words) - (n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
-def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3, out: str = "shingle") -> DataFrame:
-    """Distinct word n-gram shingles per document, as one exploded row per
-    (doc_id, shingle). Pure Catalyst: split + transform + explode.
-
-    Documents with fewer than ``n`` words produce no shingles (the row
-    is dropped by the explode of an empty array — see _distinct_grams)."""
-    return df.withColumn(out, F.explode(_distinct_grams(text_col, n)))
 
 
 def hashed_shingle_sets(
@@ -72,22 +43,28 @@ def hashed_shingle_sets(
     out: str = "sh_set",
 ) -> DataFrame:
     """Per-document DISTINCT word-n-gram shingle set, hashed to 64-bit
-    ints, as ONE row per doc: (doc, array<bigint>).
+    ints, as ONE row per doc: (doc, array<bigint>). This is THE gram-set
+    kernel: every n-gram operator (``hashed_gram_rows`` and through it
+    the n-gram pair joins and decontamination, MinHash verification)
+    reads its grams here, so no two operators disagree on what a
+    shingle is.
+
+    A shingle is ``n`` consecutive words of ``split(text, ' ')`` joined
+    by single spaces: only the space separates (doubled spaces make
+    empty words; tabs and newlines stay inside words). Documents with
+    fewer than ``n`` words, or null text, yield an empty set (kept).
 
     A document's shingle set lives inside its own row, so this is a pure
-    projection — zero shuffle, zero explode, embarrassingly parallel —
-    vs the exploded ``word_shingles`` -> groupBy collect_set form, which
-    shuffles |docs|·|shingles| rows just to reassemble what the row
-    already had. Jaccard over the hashed sets equals Jaccard over the
-    strings up to xxhash64 collisions (~n_shingles²/2⁶⁴ per doc).
-    Documents with fewer than ``n`` words yield an empty set (kept).
+    projection — zero shuffle, zero explode, embarrassingly parallel.
+    Jaccard over the hashed sets equals Jaccard over the strings up to
+    xxhash64 collisions (~n_shingles²/2⁶⁴ per doc).
 
     An Arrow kernel hashes gram byte-ranges off the string buffer (same
-    xxhash64 values as ``F.xxhash64`` over ``_distinct_grams``, no gram
-    strings; the expression form is the spec in
+    xxhash64 values as ``F.xxhash64`` over the gram strings, which are
+    never built; the string form is the spec in
     ``tests/test_dedup_fuzzy.py``). Sets come out sorted by signed hash;
-    consumers use them algebraically (intersect/size), so the order is
-    immaterial."""
+    consumers use them algebraically (intersect/size/explode), so the
+    order is immaterial."""
     out_schema = T.StructType([
         T.StructField("doc", docs.schema[id_col].dataType),
         T.StructField(out, T.ArrayType(T.LongType())),
@@ -102,11 +79,19 @@ def hashed_shingle_sets(
             m = rb.num_rows
             if not m:
                 continue
-            dh, _, kd = _distinct_gram_hashes(rb.column(1), n)
+            hashes, k = _gram_hashes_of_batch(rb.column(1), n)
+            # distinct per doc: sort by (doc, signed hash), keep the
+            # first of each run
+            seg = np.repeat(np.arange(m), k)
+            hs = hashes.view(np.int64)
+            order = np.lexsort((hs, seg))
+            hs, seg = hs[order], seg[order]
+            first = np.ones(len(hs), dtype=bool)
+            first[1:] = (hs[1:] != hs[:-1]) | (seg[1:] != seg[:-1])
             offs = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(kd, out=offs[1:])
+            np.cumsum(np.bincount(seg[first], minlength=m), out=offs[1:])
             arr = pa.ListArray.from_arrays(
-                pa.array(offs, pa.int32()), pa.array(dh, pa.int64())
+                pa.array(offs, pa.int32()), pa.array(hs[first], pa.int64())
             )
             ids = rb.column(0)
             if isinstance(ids, pa.ChunkedArray):
@@ -118,6 +103,60 @@ def hashed_shingle_sets(
     return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
 
 
+def hashed_gram_rows(
+    docs: DataFrame,
+    n: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """One row per (document, DISTINCT word-n-gram xxhash64 id):
+    ``(id_col, __n bigint, __g bigint)`` where ``__n`` is the document's
+    distinct-gram count. Documents with no grams (shorter than ``n``
+    words, or null text) emit ONE row with ``__g`` null and ``__n`` 0 —
+    explode_outer semantics, so per-doc aggregates downstream cover
+    every input document without a join back to ``docs``.
+
+    A Catalyst projection over ``hashed_shingle_sets``. The id passes
+    through untouched, so a struct id can carry other per-doc columns
+    (the streaming scorer carries the event time this way)."""
+    sets = hashed_shingle_sets(docs, n, id_col, text_col)
+    return sets.select(
+        F.col("doc").alias(id_col),
+        F.size("sh_set").cast("bigint").alias("__n"),
+        F.explode_outer("sh_set").alias("__g"),
+    )
+
+
+def _gram_overlap(docs, n, id_col, text_col, max_df, keep):
+    """The inverted-index self-join both n-gram pair functions run:
+    ``(common, sizes)`` where ``common`` is (l, r, common) — the number
+    of distinct grams docs l and r share, for every pair sharing one
+    with ``keep(l, r)`` — and ``sizes`` is (doc, n_sh), each doc's gram
+    count. The join key is the 64-bit gram id, never gram text.
+
+    ``max_df`` drops grams occurring in more than that many documents
+    BEFORE the self-join (boilerplate grams otherwise go quadratic on
+    their posting list — one gram in 10^6 docs is 10^12 join rows), from
+    the counts and the sizes alike, exactly like production dedup
+    pipelines drop boilerplate from both numerator and denominator."""
+    sh = (
+        hashed_gram_rows(docs, n, id_col, text_col)
+        .where(F.col("__g").isNotNull())
+        .select(F.col(id_col).alias("doc"), "__g")
+    )
+    if max_df is not None:
+        dfreq = sh.groupBy("__g").agg(F.count(F.lit(1)).alias("__df"))
+        sh = sh.join(dfreq.where(F.col("__df") <= max_df), "__g").drop("__df")
+    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+    a, b = sh.alias("l"), sh.alias("r")
+    common = (
+        a.join(b, (F.col("l.__g") == F.col("r.__g")) & keep(F.col("l.doc"), F.col("r.doc")))
+        .groupBy(F.col("l.doc").alias("l"), F.col("r.doc").alias("r"))
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    return common, sizes
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -126,40 +165,24 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     max_df: int | None = None,
 ) -> DataFrame:
-    """Exact Jaccard near-dup pairs over word n-gram shingle sets.
+    """Jaccard near-dup pairs over word n-gram shingle sets, exact up to
+    xxhash64 collisions.
 
     Returns (a, b, common, n_a, n_b) with a < b and
-    common/(n_a+n_b-common) >= threshold. The self-join is on shingle —
-    the canonical inverted-index pair generation. ``max_df`` drops
-    shingles occurring in more than that many documents BEFORE the
-    self-join (boilerplate shingles otherwise go quadratic on their
-    posting list — one shingle in 10^6 docs is 10^12 join rows); the
-    Jaccard is then computed over the filtered shingle sets, exactly like
-    production dedup pipelines drop boilerplate from both numerator and
-    denominator.
+    common/(n_a+n_b-common) >= threshold. The self-join is on the gram
+    id — the canonical inverted-index pair generation. ``max_df`` drops
+    grams occurring in more than that many documents from the join and
+    from the Jaccard alike (see ``_gram_overlap``).
     """
-    sh = word_shingles(docs.select(id_col, text_col), text_col, n).select(
-        F.col(id_col).alias("doc"), "shingle"
-    )
-    if max_df is not None:
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        sh = sh.join(dfreq.where(F.col("__df") <= max_df), "shingle").drop("__df")
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("l")
-    b = sh.alias("r")
-    common = (
-        a.join(b, (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l.doc") < F.col("r.doc")))
-        .groupBy(F.col("l.doc").alias("a"), F.col("r.doc").alias("b"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("common"))
-    )
+    common, sizes = _gram_overlap(docs, n, id_col, text_col, max_df, operator.lt)
     out = (
-        common.join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("n_sh", "n_a"), "a")
-        .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("n_sh", "n_b"), "b")
+        common.join(sizes.toDF("l", "n_a"), "l")
+        .join(sizes.toDF("r", "n_b"), "r")
         .where(
             F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")) >= F.lit(threshold)
         )
     )
-    return out.select("a", "b", "common", F.col("n_a").cast("bigint").alias("n_a"), F.col("n_b").cast("bigint").alias("n_b"))
+    return out.select(F.col("l").alias("a"), F.col("r").alias("b"), "common", "n_a", "n_b")
 
 
 def ngram_containment_pairs(
@@ -176,38 +199,23 @@ def ngram_containment_pairs(
     prepended boilerplate, doc-inside-doc duplication).
 
     containment(contained→container) = |A ∩ B| / |A|, computed over word
-    n-gram shingle sets. Returns (contained, container, common,
-    n_contained, containment) with containment >= threshold, BOTH
-    directions considered (a row per direction that clears the bar).
-    Same inverted-index self-join shape as ngram_jaccard_pairs, same
-    ``max_df`` boilerplate-cap discipline. A doc pair that is mutually
-    contained (near-identical) yields two rows — callers canonicalize.
+    n-gram shingle sets, exact up to xxhash64 collisions. Returns
+    (contained, container, common, n_contained, containment) with
+    containment >= threshold, BOTH directions considered (a row per
+    direction that clears the bar). Same inverted-index self-join as
+    ngram_jaccard_pairs, same ``max_df`` boilerplate-cap discipline. A
+    doc pair that is mutually contained (near-identical) yields two
+    rows — callers canonicalize.
     """
-    sh = word_shingles(docs.select(id_col, text_col), text_col, n).select(
-        F.col(id_col).alias("doc"), "shingle"
-    )
-    if max_df is not None:
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        sh = sh.join(dfreq.where(F.col("__df") <= max_df), "shingle").drop("__df")
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("l"), sh.alias("r")
-    common = (
-        a.join(b, (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l.doc") != F.col("r.doc")))
-        .groupBy(F.col("l.doc").alias("contained"), F.col("r.doc").alias("container"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("common"))
-    )
+    common, sizes = _gram_overlap(docs, n, id_col, text_col, max_df, operator.ne)
     out = (
-        common.join(
-            sizes.withColumnRenamed("doc", "contained").withColumnRenamed("n_sh", "n_contained"),
-            "contained",
-        )
+        common.join(sizes.toDF("l", "n_contained"), "l")
         .withColumn("containment", F.col("common").cast("double") / F.col("n_contained"))
         .where(F.col("containment") >= F.lit(threshold))
     )
     return out.select(
-        "contained", "container", "common",
-        F.col("n_contained").cast("bigint").alias("n_contained"),
-        "containment",
+        F.col("l").alias("contained"), F.col("r").alias("container"),
+        "common", "n_contained", "containment",
     )
 
 
@@ -257,12 +265,14 @@ def _xxh64_bytes(data, starts, lens, seed=42):
     for g in np.split(order, bounds):
         L = int(lens[g[0]])
         if L == 0:
-            h = seed + P5
-            h ^= h >> u(33)
-            h *= P2
-            h ^= h >> u(29)
-            h *= P3
-            h ^= h >> u(32)
+            # scalar arithmetic via Python ints, like the lane seeds
+            # below: numpy warns on uint64 scalar overflow
+            h = (int(seed) + _XXP5) % 2**64
+            h ^= h >> 33
+            h = h * _XXP2 % 2**64
+            h ^= h >> 29
+            h = h * _XXP3 % 2**64
+            h ^= h >> 32
             out[g] = h
             continue
         mat = data[starts[g][:, None] + np.arange(L)]
@@ -394,84 +404,6 @@ def _gram_hashes_of_batch(col, n):
     return _xxh64_bytes(data, starts, ends - starts), k
 
 
-def _distinct_gram_hashes(col, n):
-    """Per-document DISTINCT word-n-gram hashes of an Arrow string
-    column: (hashes int64 sorted within each doc, their doc index,
-    per-doc distinct count int64 of length ``len(col)``)."""
-    import numpy as np
-
-    m = len(col)
-    hashes, k = _gram_hashes_of_batch(col, n)
-    seg = np.repeat(np.arange(m), k)
-    if not len(hashes):
-        return np.empty(0, np.int64), np.empty(0, np.int64), np.zeros(m, np.int64)
-    hsig = hashes.view(np.int64)
-    order = np.lexsort((hsig, seg))
-    hs_s = hsig[order]
-    seg_s = seg[order]
-    first = np.ones(len(hs_s), dtype=bool)
-    first[1:] = (hs_s[1:] != hs_s[:-1]) | (seg_s[1:] != seg_s[:-1])
-    dseg = seg_s[first]
-    return hs_s[first], dseg, np.bincount(dseg, minlength=m).astype(np.int64)
-
-
-def hashed_gram_rows(
-    docs: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """One row per (document, DISTINCT word-n-gram xxhash64 id):
-    ``(id_col, __n bigint, __g bigint)`` where ``__n`` is the document's
-    distinct-gram count. Documents with no grams (shorter than ``n``
-    words, or null text) emit ONE row with ``__g`` null and ``__n`` 0 —
-    explode_outer semantics, so per-doc aggregates downstream cover
-    every input document without a join back to ``docs``.
-
-    An Arrow kernel hashes gram byte-ranges straight off the string
-    buffer (no gram strings, no array churn). Its values equal the
-    expression form, ``explode_outer`` of ``F.xxhash64`` over
-    ``_distinct_grams``, which is the spec in
-    ``tests/test_dedup_fuzzy.py``."""
-    out_schema = T.StructType([
-        docs.schema[id_col],
-        T.StructField("__n", T.LongType()),
-        T.StructField("__g", T.LongType()),
-    ])
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for rb in batches:
-            m = rb.num_rows
-            if not m:
-                continue
-            dh, dseg, kd = _distinct_gram_hashes(rb.column(1), n)
-            empty = np.flatnonzero(kd == 0)
-            idx = np.concatenate([dseg, empty])
-            g_vals = np.concatenate(
-                [dh, np.zeros(len(empty), np.int64)]
-            )
-            g_mask = np.concatenate(
-                [np.zeros(len(dh), bool), np.ones(len(empty), bool)]
-            )
-            ids = rb.column(0)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(idx)),
-                    pa.array(kd[idx], pa.int64()),
-                    pa.array(g_vals, pa.int64(), mask=g_mask),
-                ],
-                schema=arrow_schema,
-            )
-
-    return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
-
-
 def _xxh64_long(x, seed):
     """XXH64.hashLong(x, seed) on uint64 numpy arrays/scalars — the exact
     arithmetic of org.apache.spark.sql.catalyst.expressions.XXH64."""
@@ -506,13 +438,44 @@ def _xxh64_int(i, seed):
     return h
 
 
-def _minhash_sig_kernel(num_hashes: int, n: int, out_schema):
-    """mapInArrow kernel: (id, text) -> (id, sig). Gram xxhash64 ids come
-    straight off the Arrow string buffer (_gram_hashes_of_batch — no
-    gram strings, no Catalyst array churn), then one vectorized xxh64
-    pipeline per seed, per-doc mins via minimum.reduceat on the SIGNED
-    view (Spark's array_min over bigint compares signed longs). Docs
-    with no grams emit no row, matching the expression form."""
+def minhash_signatures(
+    docs: DataFrame,
+    num_hashes: int = 64,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """MinHash signature per document: sig[i] = min over shingles of
+    xxhash64(shingle, seed=i).
+
+    Computed as a pure PER-ROW projection — a document's shingle set
+    lives inside its own row, so no explode and no groupBy: zero
+    shuffle, embarrassingly parallel over the scan (the exploded+grouped
+    form shuffled |docs|·|shingles| rows for nothing). Documents with
+    fewer than n words produce no signature row (two empty docs must
+    NOT collide into a bucket).
+
+    Each gram STRING is hashed once and the num_hashes-member family is
+    derived by re-hashing that 64-bit id with each seed (hashing a hash
+    is a standard MinHash family construction; datasketch does the same
+    with a linear family). An Arrow kernel runs the whole walk as one
+    vectorized numpy pass per batch: gram hashes taken off the string
+    buffer (``_gram_hashes_of_batch`` — no gram strings, no Catalyst
+    array churn), one xxh64 pipeline per seed, per-doc mins via
+    minimum.reduceat on the SIGNED view (Spark's array_min over bigint
+    compares signed longs) — measured 8× the Catalyst
+    higher-order-function form at 1M docs (43.5 s -> ~5 s). Values are
+    bit-identical to that expression form (``array_min`` of
+    ``xxhash64(xxhash64(gram), i)`` over the gram strings), the spec in
+    ``tests/test_dedup_fuzzy.py``.
+
+    Returns (doc_id, sig array<bigint>).
+    """
+    out_schema = T.StructType([
+        docs.schema[id_col],
+        T.StructField("sig", T.ArrayType(T.LongType())),
+    ])
+    arrow_schema = to_arrow_schema(out_schema)
 
     def kernel(batches):
         import numpy as np
@@ -558,45 +521,8 @@ def _minhash_sig_kernel(num_hashes: int, n: int, out_schema):
                 ids = ids.combine_chunks()
             if not mask.all():
                 ids = ids.take(pa.array(np.flatnonzero(mask)))
-            yield pa.RecordBatch.from_arrays([ids, arr], schema=out_schema)
+            yield pa.RecordBatch.from_arrays([ids, arr], schema=arrow_schema)
 
-    return kernel
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 64,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """MinHash signature per document: sig[i] = min over shingles of
-    xxhash64(shingle, seed=i).
-
-    Computed as a pure PER-ROW projection — a document's shingle set
-    lives inside its own row, so no explode and no groupBy: zero
-    shuffle, embarrassingly parallel over the scan (the exploded+grouped
-    form shuffled |docs|·|shingles| rows for nothing). Documents with
-    fewer than n words produce no signature row (two empty docs must
-    NOT collide into a bucket).
-
-    Each gram STRING is hashed once and the num_hashes-member family is
-    derived by re-hashing that 64-bit id with each seed (hashing a hash
-    is a standard MinHash family construction; datasketch does the same
-    with a linear family). ``_minhash_sig_kernel`` runs the whole walk
-    as one vectorized numpy pass per Arrow batch, gram hashes taken off
-    the string buffer — measured 8× the Catalyst higher-order-function
-    form at 1M docs (43.5 s -> ~5 s). Values are bit-identical to that
-    expression form (``array_min`` of ``xxhash64(xxhash64(gram), i)``
-    over ``_distinct_grams``), the spec in ``tests/test_dedup_fuzzy.py``.
-
-    Returns (doc_id, sig array<bigint>).
-    """
-    out_schema = T.StructType([
-        docs.schema[id_col],
-        T.StructField("sig", T.ArrayType(T.LongType())),
-    ])
-    kernel = _minhash_sig_kernel(num_hashes, n, to_arrow_schema(out_schema))
     return docs.select(id_col, text_col).mapInArrow(kernel, out_schema)
 
 

@@ -113,8 +113,10 @@ def merge_into(
 
     ``when_matched="update"`` upserts: matched target rows are replaced
     by their update row, unmatched update rows are inserted (the
-    update frame must carry the full store schema). ``"delete"``
-    removes matched rows; the update frame only needs ``key_cols``.
+    update frame must carry the full store schema: a column of a
+    rewritten dir that it lacks raises ``ValueError`` before anything is
+    written). ``"delete"`` removes matched rows; the update frame only
+    needs ``key_cols``.
     Returns the merge metrics dict, or None for a no-op delete.
 
     ``run_id`` pins the commit's identity — streaming callers pass a
@@ -365,6 +367,14 @@ def _merge_run(
         if "date" in target.columns:  # the writer re-derives it
             target = target.drop("date")
         if when_matched == "update":
+            # a store column the updates lack would be written as null,
+            # dropping the stored values without an error
+            have = {c.lower() for c in updates.columns}
+            missing = [c for c in target.columns if c.lower() not in have]
+            if missing:
+                raise ValueError(
+                    f"merge_into: updates lack store column(s) {missing}"
+                )
             # exact per-update-key accounting even when the store holds
             # duplicate rows for a key (re-delivered appends): one
             # broadcast semi-join count over the PRUNED dirs

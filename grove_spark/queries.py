@@ -684,8 +684,9 @@ GROUP BY c_mktsegment
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs by exact word-3-gram Jaccard >= 0.5 (the planted
-    near-duplicates in the documents fixture)."""
+    """Near-dup pairs by word-3-gram Jaccard >= 0.5 (the planted
+    near-duplicates in the documents fixture); Spark joins gram ids, the
+    oracle the gram strings."""
     from grove_spark.operators.dedup_fuzzy import ngram_jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")

@@ -6,17 +6,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from grove_spark.operators.dedup_fuzzy import (
-    _distinct_grams,
     embedding_near_pairs,
     hashed_gram_rows,
     hashed_shingle_sets,
     lsh_candidate_pairs,
     minhash_dedup_pairs,
     minhash_signatures,
+    ngram_containment_pairs,
     ngram_jaccard_pairs,
     simhash,
     simhash_near_pairs,
-    word_shingles,
 )
 
 BASE = (
@@ -37,8 +36,96 @@ SCHEMA = T.StructType([
 
 # ---- expression specs of the Arrow gram kernels ---------------------------
 # The package keeps one form per operator: the kernels. These Catalyst
-# expression forms over the shared shingle definition (_distinct_grams)
+# expression forms over the string shingle definition (_distinct_grams)
 # are what each kernel must equal, value for value.
+
+
+def _distinct_grams(text_col: str, n: int):
+    """DISTINCT word n-gram shingle array for one document row: the
+    string form of the shingle definition every gram kernel is tested
+    against.
+
+    Documents with fewer than ``n`` words yield an empty array —
+    guarded explicitly: ``sequence(0, k-1)`` with k=0 yields a
+    DESCENDING [0,-1] in Spark and the slice at start 0 throws
+    INVALID_PARAMETER_VALUE.START."""
+    words = F.split(F.col(text_col), " ")
+    k = F.size(words) - (n - 1)
+    grams = F.when(
+        k > 0,
+        F.transform(
+            F.sequence(F.lit(1), k),
+            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return F.array_distinct(grams)
+
+
+def word_shingles(df, text_col: str = "text", n: int = 3, out: str = "shingle"):
+    """Distinct word n-gram shingles per document, as one exploded row per
+    (doc_id, shingle). Pure Catalyst: split + transform + explode.
+
+    Documents with fewer than ``n`` words produce no shingles (the row
+    is dropped by the explode of an empty array — see _distinct_grams)."""
+    return df.withColumn(out, F.explode(_distinct_grams(text_col, n)))
+
+
+def spec_ngram_jaccard_pairs(docs, threshold=0.8, n=3, id_col="doc_id",
+                             text_col="text", max_df=None):
+    """ngram_jaccard_pairs: the self-join on the gram STRING."""
+    sh = word_shingles(docs.select(id_col, text_col), text_col, n).select(
+        F.col(id_col).alias("doc"), "shingle"
+    )
+    if max_df is not None:
+        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+        sh = sh.join(dfreq.where(F.col("__df") <= max_df), "shingle").drop("__df")
+    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+    a = sh.alias("l")
+    b = sh.alias("r")
+    common = (
+        a.join(b, (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l.doc") < F.col("r.doc")))
+        .groupBy(F.col("l.doc").alias("a"), F.col("r.doc").alias("b"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("common"))
+    )
+    out = (
+        common.join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("n_sh", "n_a"), "a")
+        .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("n_sh", "n_b"), "b")
+        .where(
+            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")) >= F.lit(threshold)
+        )
+    )
+    return out.select("a", "b", "common", F.col("n_a").cast("bigint").alias("n_a"), F.col("n_b").cast("bigint").alias("n_b"))
+
+
+def spec_ngram_containment_pairs(docs, threshold=0.8, n=3, id_col="doc_id",
+                                 text_col="text", max_df=None):
+    """ngram_containment_pairs: the self-join on the gram STRING."""
+    sh = word_shingles(docs.select(id_col, text_col), text_col, n).select(
+        F.col(id_col).alias("doc"), "shingle"
+    )
+    if max_df is not None:
+        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+        sh = sh.join(dfreq.where(F.col("__df") <= max_df), "shingle").drop("__df")
+    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+    a, b = sh.alias("l"), sh.alias("r")
+    common = (
+        a.join(b, (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l.doc") != F.col("r.doc")))
+        .groupBy(F.col("l.doc").alias("contained"), F.col("r.doc").alias("container"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("common"))
+    )
+    out = (
+        common.join(
+            sizes.withColumnRenamed("doc", "contained").withColumnRenamed("n_sh", "n_contained"),
+            "contained",
+        )
+        .withColumn("containment", F.col("common").cast("double") / F.col("n_contained"))
+        .where(F.col("containment") >= F.lit(threshold))
+    )
+    return out.select(
+        "contained", "container", "common",
+        F.col("n_contained").cast("bigint").alias("n_contained"),
+        "containment",
+    )
 
 
 def _spec_gram_hashes(text_col: str, n: int):
@@ -440,3 +527,82 @@ def test_hashed_shingle_sets_parity(spark):
          for r in spec_hashed_shingle_sets(df, 3).collect()}
     assert a == c
     assert len(a) == 300 + len(ADVERSARIAL_TEXTS)  # short docs kept, empty sets
+
+
+def test_empty_gram_hash_raises_no_warning(spark):
+    """An empty gram (n=1 over empty text or doubled spaces) hashes
+    without numpy's uint64 scalar-overflow RuntimeWarning, which an
+    executor would print for every such batch, and to F.xxhash64's
+    value."""
+    import warnings
+
+    import numpy as np
+    import pyarrow as pa
+
+    from grove_spark.operators.dedup_fuzzy import _gram_hashes_of_batch
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        hashes, k = _gram_hashes_of_batch(pa.array(["", "a  b"]), 1)
+    grams = ["", "a", "", "b"]
+    df = spark.createDataFrame([(g,) for g in grams], "g string")
+    exp = [r[0] for r in df.select(F.xxhash64("g")).collect()]
+    assert k.tolist() == [1, 3]
+    assert hashes.view(np.int64).tolist() == exp
+
+
+# Words of the pair corpus: the empty word (doubled spaces), a tab
+# inside a word (only ' ' separates), multi-byte UTF-8, and 34-/40-byte
+# words (XXH64's stripe path).
+PAIR_VOCAB = ["a", "b", "c", "d", "", "tab\tword", "ünï", "日本語", "🙂",
+              "x" * 34, "y" * 40]
+
+
+def _pair_corpus(spark):
+    """Near-dup families (a template plus 0-3 word edits) so pairs clear
+    the thresholds, plus null, empty, short and leading-space/tab texts
+    and duplicated doc ids, as (doc_id, text)."""
+    import random
+
+    rng = random.Random(7)
+    templates = [[rng.choice(PAIR_VOCAB) for _ in range(rng.randint(4, 14))]
+                 for _ in range(6)]
+    rows = []
+    for i in range(80):
+        words = list(templates[i % len(templates)])
+        for _ in range(rng.randint(0, 3)):
+            words[rng.randrange(len(words))] = rng.choice(PAIR_VOCAB)
+        rows.append((i, " ".join(words)))
+    rows += [
+        (100, None), (101, ""), (102, "a"), (103, "a b"),
+        (104, " " + rows[0][1]), (105, "\t" + rows[1][1]),
+        (106, rows[2][1].replace(" ", "  ")),
+        (3, rows[3][1]),  # the same id twice, same text
+        (5, rows[11][1]),  # the same id twice, another doc's text
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_ngram_pairs_match_string_gram_spec(spark):
+    """Both pair functions (self-join on the 64-bit gram id) return
+    exactly the rows of their string-gram specs, with and without the
+    max_df cap, at n=3 and n=1 (where the empty word is a gram)."""
+    df = _pair_corpus(spark)
+    cases = [
+        (ngram_jaccard_pairs, spec_ngram_jaccard_pairs, 0.3),
+        (ngram_containment_pairs, spec_ngram_containment_pairs, 0.5),
+    ]
+    for fn, spec, threshold in cases:
+        for n in (3, 1):
+            uncapped = None
+            for max_df in (None, 12):
+                got = sorted(tuple(r) for r in fn(
+                    df, threshold=threshold, n=n, max_df=max_df).collect())
+                want = sorted(tuple(r) for r in spec(
+                    df, threshold=threshold, n=n, max_df=max_df).collect())
+                assert got == want, (fn.__name__, n, max_df)
+                # not vacuous: every case returns dozens of pairs
+                assert len(want) > 40, (fn.__name__, n, max_df)
+                if max_df is None:
+                    uncapped = want
+            assert want != uncapped, (fn.__name__, n)  # the cap engaged

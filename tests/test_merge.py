@@ -391,3 +391,19 @@ def test_readers_agree_on_schema_evolved_store(spark, tmp_path):
     compacted = manifest_scan(spark, state)
     assert sorted(compacted.columns) == sorted(before.columns)
     assert _by_id(compacted, cols) == rows
+
+
+def test_update_missing_store_column_raises_before_writing(spark, tmp_path):
+    """An update frame without a column the rewritten dirs hold raises a
+    ValueError naming it, before any run dir is registered or written:
+    writing the column as null would drop the stored values."""
+    state, out = _evolved_store(spark, tmp_path)
+    version = state.version()
+    paths = sorted(state.committed_paths())
+    dirs = sorted(os.listdir(out))
+    upd = spark.createDataFrame(_rows([5, 150], typ="patched"), SCHEMA)
+    with pytest.raises(ValueError, match="region"):
+        merge_into(spark, state, out, upd, ["event_id"], when_matched="update")
+    assert state.version() == version
+    assert sorted(state.committed_paths()) == paths
+    assert sorted(os.listdir(out)) == dirs

@@ -171,7 +171,8 @@ def test_every_gate_query_is_python_free(spark):
                      # operators' only form (bit-identical to the
                      # expression specs in test_dedup_fuzzy.py; 8x+ on
                      # the 1M-doc legs)
-                     "minhash_lsh", "decontaminate"}
+                     "minhash_lsh", "decontaminate",
+                     "ngram_jaccard", "containment", "dedup_clusters"}
     for name, fn in QUERIES.items():
         if name == "stream_tumbling":
             continue  # executes a streaming query; covered by its own test
@@ -478,6 +479,38 @@ def test_one_form_per_operator():
                 switched.append(f"{info.name}.{name}")
     assert switched == []
     assert "pandas_udf" not in inspect.getsource(parse)
+
+    # n-gram operators read the one gram-set kernel: only the Arrow
+    # kernels hash grams (off the string buffer), and every F.xxhash64
+    # call site in the package hashes something other than a gram string
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(grove_spark.__file__).parent
+
+    def callers(name):
+        out = set()
+        for p in pkg.rglob("*.py"):
+            for top in ast.parse(p.read_text()).body:
+                for node in ast.walk(top):
+                    if isinstance(node, ast.Call) and name == getattr(
+                        node.func, "attr", getattr(node.func, "id", None)
+                    ):
+                        out.add((str(p.relative_to(pkg)), getattr(top, "name", "<module>")))
+        return out
+
+    assert callers("_gram_hashes_of_batch") == {
+        ("operators/dedup_fuzzy.py", "hashed_shingle_sets"),
+        ("operators/dedup_fuzzy.py", "minhash_signatures"),
+    }
+    assert callers("xxhash64") == {
+        ("operators/dedup.py", "dedup_within_batch"),  # entry columns
+        ("operators/dedup.py", "dedup_lines"),  # whole lines
+        ("operators/dedup_fuzzy.py", "lsh_candidate_pairs"),  # band slices
+        ("operators/dedup_fuzzy.py", "simhash"),  # single words
+        ("operators/routing.py", "salted_repartition"),  # salt column
+        ("sources/bloom.py", "_hash_cols"),  # merge keys
+    }
 
 
 def test_resumed_run_and_registry_frames_are_local(spark, tmp_path):
